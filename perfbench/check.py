@@ -54,7 +54,9 @@ class Oracle:
                         f"{families.get(f.name.lower())}")
         got = canonicalize(s_cols, [tuple(r) for r in rows])
         if got != expected:
-            return f"{name}: {len(got)} rows differ from oracle's {len(expected)}"
+            diff = next(((g, e) for g, e in zip(got, expected) if g != e), None)
+            return (f"{name}: {len(got)} rows differ from oracle's {len(expected)}; "
+                    f"first differing (spark, oracle): {diff}")
         return None
 
 

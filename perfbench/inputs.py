@@ -24,9 +24,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-# Word vocabulary of the driver's synthetic documents table (the
-# registry's search/phrase queries probe these words), plus longer
-# words so the NER and quality queries see varied tokens.
+# Word vocabulary of the synthetic documents table that
+# tools/gen_scaledata.py writes (the registry's search/phrase queries
+# probe these words), plus longer words so the NER and quality queries
+# see varied tokens.
 DOC_VOCAB = [
     "a", "agg", "batch", "big", "column", "customer", "data", "dup", "fast",
     "filter", "group", "hash", "join", "key", "line", "merge", "order",
@@ -201,25 +202,26 @@ class ArticleLog:
 
 
 class CrawlSource:
-    """The seeded web the batch pipeline crawls.
+    """The seeded web the ingest workload crawls.
 
     ``increment(i)`` returns the listing and content fetchers of the
-    i-th re-crawl: a fixed number of listing cards drawn from a bounded
-    universe, mixing replayed articles (the version seen last), updated
-    articles (a new version) and articles never seen before. Increment
-    0 is the pre-load: the whole initial universe at version 0.
+    i-th re-crawl. Increment 0 is the pre-load: the whole universe at
+    version 0. Every later increment lists a fixed number of cards
+    drawn from that same universe, mixing replayed articles (the
+    version seen last) and updated ones (a new version). No increment
+    brings a key from outside the universe: the ingest path never
+    deletes an article, so a new key would grow every table by one
+    row for good.
     """
 
     PAGE_SIZE = 50  # listing cards per page
-    NEW_SHARE = 0.05  # cards for articles never seen before
-    UPDATE_SHARE = 0.4  # known articles re-crawled at a new version
+    UPDATE_SHARE = 0.4  # re-crawled articles that come back at a new version
     MISS_SHARE = 0.02  # fetches that return no body
 
     def __init__(self, seed: int, universe: int, per_increment: int):
         self.seed = seed
         self.universe = universe
         self.per_increment = per_increment
-        self.next_key = universe
         self.versions: dict[int, int] = {}
         self.log = ArticleLog()
         self.input_bytes = 0
@@ -229,12 +231,8 @@ class CrawlSource:
         if i == 0:
             keys = list(range(self.universe))
         else:
-            n_new = int(self.per_increment * self.NEW_SHARE)
-            known = g.choice(self.next_key, size=self.per_increment - n_new,
-                             replace=False)
-            keys = [int(k) for k in known] + list(
-                range(self.next_key, self.next_key + n_new))
-            self.next_key += n_new
+            keys = [int(k) for k in g.choice(self.universe, size=self.per_increment,
+                                              replace=False)]
         cards, delivered = [], []
         for key in keys:
             version = self.versions.get(key, -1)

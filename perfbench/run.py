@@ -3,28 +3,33 @@ public API, with correctness checks and an optional traced run.
 
 Usage (from the root of a checkout)::
 
-    python3 perfbench/run.py --workload ingest --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload ingest --seed 1 --seconds 12 --trace 0
 
 Workloads (see ``workloads.py`` for why each exists):
 
 - ``ingest``     closed loop, 1 client: crawl increments through the
                  streaming medallion consumer (crawl → feed file →
                  bronze → silver → gold → search index)
-- ``query_mix``  closed loop of dashboard refreshes: gold-analytics,
-                 search, entity and LLM-curation views over 2 connections
+- ``query_mix``  closed loop over 2 connections: dashboard refreshes
+                 (gold-analytics, search and entity views) alternating
+                 with LLM-curation passes
 
 End-to-end metrics, the same four on every workload: ``setup_s``
 (session start, input generation, pre-load and warm-up),
 ``peak_rss_mb`` (peak resident memory of this process plus the JVM),
 ``throughput_per_s`` (articles ingested per second of increment time;
-requests per second) and ``latency_p50_s`` (median crawl increment;
-median dashboard refresh). Failed or mismatched operations are the
-result's ``failed`` count.
+requests per second, curation included) and ``latency_p50_s`` (median
+crawl increment; median dashboard refresh). Failed or mismatched
+operations are the result's ``failed`` count.
 
 ``--trace 0`` prints the end-to-end metrics, measured with no tracing
-installed; ``--trace 1`` wraps each layer's public functions and runs
-every operation under its own Spark job group, and prints the
-per-layer metrics instead. The last stdout line is the result object
+installed. ``--trace 1`` measures the same window twice: first
+untraced, then with each layer's public functions wrapped and every
+operation under its own Spark job group. It prints the per-layer
+metrics of the traced window, and the change in median operation
+latency between the two windows as ``trace.overhead_ratio``.
+
+The last stdout line is the result object
 ``{"correct", "attempted", "failed", "metrics"}``; the line before it
 (``{"stamp": ...}``) labels the run with the host, versions, input
 sizes and the details behind each metric, so numbers from different
@@ -137,6 +142,16 @@ def _proc_status(pid: int, key: str) -> int:
     return 0
 
 
+def cpu_ticks() -> tuple[int, int]:
+    """(stolen, total) CPU ticks of the whole machine so far, from
+    /proc/stat: time a virtual machine's CPUs were ready but the host
+    ran something else. The stamp reports the stolen share of the
+    measured window, because on a shared host it moves every timing."""
+    with open("/proc/stat") as fh:
+        ticks = [int(x) for x in fh.readline().split()[1:]]
+    return ticks[7], sum(ticks)
+
+
 def peak_rss_mb(spark) -> float:
     """Peak resident memory (VmHWM) of this Python process plus the JVM
     (spark-submit execs the JVM in the process the gateway launched)."""
@@ -145,11 +160,13 @@ def peak_rss_mb(spark) -> float:
 
 
 def _stop_spark(spark) -> None:
-    """Stop the session, then the JVM it runs in, and wait for it."""
+    """Stop the session, if one was made, then the JVM, and wait for it
+    (a run stopped while the session was starting still has a JVM)."""
     from pyspark import SparkContext
 
     gateway = SparkContext._gateway
-    spark.stop()
+    if spark is not None:
+        spark.stop()
     if gateway is None:
         return
     proc = gateway.proc
@@ -172,7 +189,8 @@ def _quantiles(vals: list[float]) -> dict:
     return out
 
 
-def layer_metrics(w, tracer, session_start_s: float, floor_s: float) -> dict:
+def layer_metrics(w, tracer, session_start_s: float, floor_s: float,
+                  overhead: float) -> dict:
     from perfbench.trace import BUILD_SPANS
     from perfbench.workloads import DASH_QUERIES, LLM_QUERIES
 
@@ -207,7 +225,7 @@ def layer_metrics(w, tracer, session_start_s: float, floor_s: float) -> dict:
         "medallion.build_s": per_op("medallion.build"),
         "text.index_build_s": per_op("text.index_build"),
         "http_source.listing_s": per_op("http_source.listing"),
-        "trace.overhead_ratio": tracer.overhead_s / sum(op_s),
+        "trace.overhead_ratio": overhead,
     })
     for kind, queries, fields in (("llm", LLM_QUERIES, ("exec_s", "build_s", "jobs")),
                                   ("dash", DASH_QUERIES, ("p50_s", "jobs"))):
@@ -225,7 +243,8 @@ def layer_metrics(w, tracer, session_start_s: float, floor_s: float) -> dict:
     return {k: {"value": float(out[k]), "unit": u} for k, u in names.items()}
 
 
-def stamp(args, w, spark, session_start_s, setup_s, tracer_overhead) -> dict:
+def stamp(args, w, spark, session_start_s, setup_s, tracer_overhead,
+          steal_share) -> dict:
     import duckdb
     import pyarrow
     import pyspark
@@ -238,6 +257,7 @@ def stamp(args, w, spark, session_start_s, setup_s, tracer_overhead) -> dict:
         "trace": args.trace,
         "nproc": os.cpu_count(),
         "usable_cpus": len(os.sched_getaffinity(0)),
+        "cpu_steal_share": steal_share,
         "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
         "spark_master": spark.sparkContext.master,
         "driver_memory": DRIVER_MEMORY,
@@ -297,23 +317,32 @@ def main(argv=None) -> int:
         w.setup()
         setup_s = time.perf_counter() - t0
 
+        stolen0, total0 = cpu_ticks()
+        w.measure(time.perf_counter() + args.seconds)
         tracer = None
         if args.trace:
+            # the same window again with every layer wrapped: the
+            # per-layer numbers come from this one, and the change in
+            # median operation latency is the tracing overhead
             from perfbench.trace import Tracer
 
+            untraced_p50 = statistics.median(w.latencies)
+            w.new_window()
             tracer = Tracer(spark)
             w.tracer = tracer
             tracer.install()
-        try:
-            w.measure(time.perf_counter() + args.seconds)
-        finally:
-            if tracer is not None:
+            try:
+                w.measure(time.perf_counter() + args.seconds)
+            finally:
                 tracer.uninstall()
+            overhead = statistics.median(w.latencies) / untraced_p50 - 1
+        stolen1, total1 = cpu_ticks()
+        steal_share = (stolen1 - stolen0) / max(1, total1 - total0)
         w.check()
 
         if args.trace:
-            metrics = layer_metrics(w, tracer, session_start_s, tracer.job_floor_s())
-            overhead = metrics["trace.overhead_ratio"]["value"]
+            metrics = layer_metrics(w, tracer, session_start_s, tracer.job_floor_s(),
+                                    overhead)
             tracer.dump(os.path.join(
                 ROOT, ".bench_out", f"trace-{args.workload}-{args.seed}.jsonl"))
         else:
@@ -326,13 +355,12 @@ def main(argv=None) -> int:
             }
             metrics = {k: {"value": float(v), "unit": END_TO_END[k]}
                        for k, v in metrics.items()}
-        info = stamp(args, w, spark, session_start_s, setup_s, overhead)
+        info = stamp(args, w, spark, session_start_s, setup_s, overhead, steal_share)
     except Exception:
         traceback.print_exc()
         return 1
     finally:
-        if spark is not None:
-            _stop_spark(spark)
+        _stop_spark(spark)
         shutil.rmtree(work, ignore_errors=True)
         with contextlib.suppress(OSError):
             os.rmdir(os.path.dirname(work))  # only when no other run uses it

@@ -51,6 +51,15 @@ def test_crawl_increments_hold_distinct_articles():
         assert len(keys) == len(set(keys))
 
 
+def test_live_keys_stay_level():
+    """Increments re-crawl the pre-loaded universe and never add a key,
+    so every table the ingest path writes keeps its size."""
+    src = inputs.CrawlSource(3, universe=120, per_increment=40)
+    for i in range(8):
+        src.increment(i)
+        assert set(src.log.latest_wins()) == set(range(120))
+
+
 def test_crawl_misses_are_not_delivered():
     src = inputs.CrawlSource(5, universe=100, per_increment=100)
     src.MISS_SHARE = 0.5

@@ -5,8 +5,7 @@ functions of each layer are wrapped at their module boundary for the
 duration of the run, and every operation runs under its own Spark job
 group so the public ``StatusTracker`` can count the jobs, stages and
 tasks it launched. Nothing here is installed in the untraced run, so
-the end-to-end numbers never include tracing cost; the tracer also
-times its own bookkeeping and reports it as the in-run overhead.
+the end-to-end numbers never include tracing cost.
 """
 
 from __future__ import annotations
@@ -75,7 +74,6 @@ class Tracer:
         self.bytes_written = 0
         self.rows_written: dict[str, int] = defaultdict(int)  # table → rows
         self.stream_queries: list = []  # every streaming query started
-        self.overhead_s = 0.0
         self._ids = itertools.count(1)
         self._local = threading.local()
         self._lock = threading.Lock()
@@ -90,14 +88,12 @@ class Tracer:
 
     @contextlib.contextmanager
     def span(self, name: str):
-        t0 = time.perf_counter()
         stack = self._stack()
         sid = next(self._ids)
         parent = stack[-1] if stack else None
         op = getattr(self._local, "op", None)
         stack.append(sid)
         start = time.perf_counter()
-        self._add_overhead(start - t0)
         try:
             yield
         finally:
@@ -105,11 +101,6 @@ class Tracer:
             stack.pop()
             with self._lock:
                 self.spans.append((sid, parent, op, name, start, end))
-            self._add_overhead(time.perf_counter() - end)
-
-    def _add_overhead(self, dt: float) -> None:
-        with self._lock:
-            self.overhead_s += dt
 
     def _wrapper(self, fn, name: str):
         tracer = self
@@ -129,12 +120,10 @@ class Tracer:
             def traced(*args, **kwargs):
                 with tracer.span(name):
                     path = fn(*args, **kwargs)
-                t0 = time.perf_counter()
                 size, rows = dir_bytes(path), parquet_rows(path)
                 with tracer._lock:
                     tracer.bytes_written += size
                     tracer.rows_written[os.path.basename(os.path.dirname(path))] += rows
-                tracer._add_overhead(time.perf_counter() - t0)
                 return path
         elif name == "stream.start":
             def traced(*args, **kwargs):
@@ -183,7 +172,6 @@ class Tracer:
     def op(self, kind: str, name: str):
         """One measured operation: its own job group, a root span, and
         exact job/stage/task counts read back from the status tracker."""
-        t0 = time.perf_counter()
         record = {"kind": kind, "name": name}
         with self._lock:
             index = len(self.ops)
@@ -192,17 +180,14 @@ class Tracer:
         sc = self.spark.sparkContext
         sc.setJobGroup(group, f"{kind} {name}")
         self._local.op = index
-        self._add_overhead(time.perf_counter() - t0)
         try:
             with self.span(f"op.{kind}"):
                 yield record
         finally:
-            t1 = time.perf_counter()
             self._local.op = None
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
             record.update(self.job_counts(group))
-            self._add_overhead(time.perf_counter() - t1)
 
     def job_counts(self, group: str, after: int = -1) -> dict:
         """Jobs, stages that ran tasks, and tasks of a job group; only

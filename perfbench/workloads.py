@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import contextlib
 import os
-import random
 import statistics
 import threading
 import time
@@ -64,6 +63,14 @@ class Workload:
             return contextlib.nullcontext()
         return self.tracer.span(name)
 
+    def new_window(self) -> None:
+        """Start a fresh measured window: what ``measure`` records so
+        far (warm-up, or the untraced half of a traced run) is dropped.
+        ``attempted`` and ``failures`` keep counting: every operation's
+        output is checked, warm-up included."""
+        self.latencies = []
+        self.work = 0
+
     def fail(self, what: str) -> None:
         self.failures.append(what)
         print(f"perfbench: FAILED {what}", flush=True)
@@ -100,11 +107,12 @@ FEED_SCHEMA = (
 
 class Ingest(Workload):
     """Closed loop, one client: crawl increments through the streaming
-    medallion consumer, into a warehouse pre-loaded with a bounded
-    article universe (so table sizes stay level).
+    medallion consumer, into a warehouse pre-loaded with a fixed
+    article universe. Increments re-crawl that universe and never add a
+    key, so bronze, silver, gold and the search index keep their size.
 
-    One operation is one seeded re-crawl, mixing replayed, updated and
-    new articles: the listing fetch and the distributed content fan-out
+    One operation is one seeded re-crawl, mixing replayed and updated
+    articles: the listing fetch and the distributed content fan-out
     (``sources.http_source``, with injected fetchers that derive each
     body from the seed), the articles landed as one file in the
     consumer's feed directory (the broker hop), then
@@ -112,15 +120,24 @@ class Ingest(Workload):
     the new file into bronze (insert-if-absent) and silver (latest-wins)
     under its checkpoint, and gold and the search index are refreshed.
 
-    Why: per-row cleaning and tokenizing, the copy-on-write keyed merges,
-    the checkpoint log and the snapshot commits do the work; every
-    commit is a new file identity, so the plan cache never hits.
+    Sizes follow the traffic this engine was sized on: 100-article
+    micro-batches, as the streaming consumer sees them, into a
+    2,500-article warehouse, the smallest the batch pipeline ran at.
+
+    Why: at this size fixed per-increment costs dominate: Spark job
+    launches, the streaming query's start and checkpoint log, and five
+    snapshot commits per increment, each re-reading and rewriting a
+    whole 2,500-row table (copy-on-write merges). Every commit is a new
+    file identity, so the plan cache never hits.
     """
 
     op_unit = "crawl increment"
     work_unit = "article"
-    UNIVERSE = 300
+    UNIVERSE = 2500
     PER_INCREMENT = 100
+    # increments run before timing starts. The pre-load pays nearly all
+    # of the JVM's cold start (20 s against 5 s for a warm increment);
+    # the one increment after it still runs about a tenth slow.
     WARM_INCREMENTS = 1
 
     def setup(self) -> None:
@@ -131,14 +148,19 @@ class Ingest(Workload):
         self.warehouse = os.path.join(d, "warehouse")
         os.makedirs(self.feed)
         self.source = inputs.CrawlSource(self.seed, self.UNIVERSE, self.PER_INCREMENT)
-        self.queries: list = []  # the drain queries of traced operations
         self.next_increment = 0
+        self.warm_s: list[float] = []
         for _ in range(1 + self.WARM_INCREMENTS):  # the pre-load, then warm-up
-            self._increment(timed=False)
-        self.sizes = {"universe": self.UNIVERSE, "per_increment": self.PER_INCREMENT}
+            self.warm_s.append(self._increment(timed=False))
+        self.sizes = {"universe": self.UNIVERSE, "per_increment": self.PER_INCREMENT,
+                      "warm_increments": self.WARM_INCREMENTS}
+        self.new_window()
+
+    def new_window(self) -> None:
+        super().new_window()
         self.measured_input_bytes = 0
 
-    def _increment(self, timed: bool) -> None:
+    def _increment(self, timed: bool) -> float:
         from pyspark.sql import functions as F
 
         from simple_etl_spark import pipeline
@@ -170,11 +192,12 @@ class Ingest(Workload):
                 "gold_processed": sum(inputs.in_gold(k) for k in kept)}
         if tally != want:
             self.fail(f"increment {i}: tally {tally}, generator log implies {want}")
+        self.attempted += 1
         if timed:
-            self.attempted += 1
             self.latencies.append(dt)
             self.work += len(delivered)
             self.measured_input_bytes += self.source.input_bytes - bytes_before
+        return dt
 
     def _publish(self, crawled, name: str) -> None:
         """Write the crawl as one JSON file beside the feed and rename it
@@ -190,6 +213,9 @@ class Ingest(Workload):
 
     def throughput(self) -> float:
         return self.work / sum(self.latencies)
+
+    def details(self) -> dict:
+        return {"preload_and_warm_s": self.warm_s}
 
     def check(self) -> None:
         from simple_etl_spark.sources.table_store import read_table
@@ -249,15 +275,25 @@ def _current(base: str) -> str:
 
 
 class QueryMix(Workload):
-    """Closed loop of dashboard refreshes over a generated corpus: a
-    refresh runs every view of the mix once, in a seeded order, spread
-    over ``CLIENTS`` connections, and the next refresh starts when the
-    last view returns. A view is built through the registry and
-    collected; every result is compared with its DuckDB oracle twin
-    afterwards. The refresh, not the single request, is the operation:
-    request latencies differ fivefold across the views, so their median
-    jumps between views from run to run, while a refresh is the same
-    work every time.
+    """Closed loop over ``CLIENTS`` connections on a generated corpus, in
+    cycles: a dashboard refresh, then a curation pass. A refresh runs
+    every dashboard view once and a pass every curation view once, in a
+    fixed order (a dashboard's panel layout), taken from a shared queue
+    by the connections; the next starts when the last view returns. A
+    view is built through the registry and collected; every result is
+    compared with its DuckDB oracle twin afterwards.
+
+    The reported latency is the dashboard refresh's, not a single
+    request's: request latencies differ fivefold across the views, so
+    their median jumps between views from run to run, while a refresh
+    is the same work every time. For the same reason the order is
+    fixed: a shuffled one changes which connection carries the slowest
+    view, and with it a refresh's time by up to a fifth. Refreshes and
+    passes alternate one to one because a refresh that follows a pass
+    runs about a quarter slower than one that follows another refresh.
+    Curation passes are timed on their own and count in the request
+    throughput, so a change to the long curation queries shows there
+    and cannot hide a change to the short dashboard reads.
 
     Why: the dashboard views are short, latency-bound reads where plan
     build, py4j and job count × job-launch floor dominate, the session
@@ -271,7 +307,9 @@ class QueryMix(Workload):
     N_DOCS = 1500
     N_EMB = 300
     CLIENTS = 2
-    WARM_PASSES = 1
+    # cycles run before timing starts: enough for the JVM's JIT to
+    # settle (refresh latencies fall for about five refreshes)
+    WARM_CYCLES = 5
 
     def setup(self) -> None:
         from simple_etl_spark.engine import tune_for_input
@@ -285,11 +323,16 @@ class QueryMix(Workload):
         # the engine's own sizing for small inputs, as a server built on
         # it would apply once per data directory
         tune_for_input(self.spark, self.data_dir)
-        # warm-up: passes over the mix split across the clients, each
-        # result checked
-        for _ in range(self.WARM_PASSES):
-            self._clients(lambda c: [
-                self._verify(q, *self._run(q)[1:3]) for q in QUERY_MIX[c::self.CLIENTS]])
+        self.results: list[tuple] = []  # (query, seconds, schema, rows)
+        self.pass_s: list[float] = []
+        for _ in range(self.WARM_CYCLES):
+            self._cycle()
+        self.new_window()
+
+    def new_window(self) -> None:
+        super().new_window()
+        self.pass_s = []
+        self.span_s = 0.0
 
     def _clients(self, body) -> None:
         errors = []
@@ -324,54 +367,51 @@ class QueryMix(Workload):
         rec.update(build_s=t1 - t0, exec_s=t2 - t1)
         return t2 - t0, df.schema, rows
 
-    def _verify(self, q: str, schema, rows) -> bool:
-        why = self.oracle.mismatch(q, schema, rows)
-        if why:
-            self.fail(why)
-        return why is None
-
-    def measure(self, deadline: float) -> None:
-        """Dashboard refreshes until the deadline: each refresh runs
-        every view once, in a seeded order, over the clients'
-        connections, and ends when its last view returns."""
-        rng = random.Random(f"{self.seed}:refreshes")
+    def _fan_out(self, views: list[str]) -> float:
+        """Run ``views`` over the clients' connections; returns the
+        seconds until the last one returned."""
+        views = list(views)
         lock = threading.Lock()
-        results = []
-        self.refresh_s: list[float] = []
 
-        def refresh(views: list[str]) -> None:
-            def client(_c: int) -> None:
-                while True:
-                    with lock:
-                        if not views:
-                            return
-                        q = views.pop(0)
-                    try:
-                        result = (q, *self._run(q))
-                    except Exception:  # one failed request must not end the run
-                        traceback.print_exc()
-                        result = (q, None, None, None)
-                    with lock:
-                        results.append(result)
-
-            self._clients(client)
+        def client(_c: int) -> None:
+            while True:
+                with lock:
+                    if not views:
+                        return
+                    q = views.pop(0)
+                try:
+                    result = (q, *self._run(q))
+                except Exception:  # one failed request must not end the run
+                    traceback.print_exc()
+                    result = (q, None, None, None)
+                with lock:
+                    self.results.append(result)
+                    self.attempted += 1
+                    self.work += result[2] is not None
 
         t0 = time.perf_counter()
-        while not self.refresh_s or time.perf_counter() < deadline:
-            start = time.perf_counter()
-            refresh(rng.sample(QUERY_MIX, len(QUERY_MIX)))
-            self.refresh_s.append(time.perf_counter() - start)
-        self.span_s = time.perf_counter() - t0
-        self.results = results
+        self._clients(client)
+        return time.perf_counter() - t0
+
+    def _cycle(self) -> None:
+        self.latencies.append(self._fan_out(DASH_QUERIES))
+        self.pass_s.append(self._fan_out(LLM_QUERIES))
+
+    def measure(self, deadline: float) -> None:
+        t0 = time.perf_counter()
+        while not self.latencies or time.perf_counter() < deadline:
+            self._cycle()
+        self.span_s += time.perf_counter() - t0
 
     def check(self) -> None:
+        """Every result, warm-up included, against its oracle twin."""
         for q, _dt, schema, rows in self.results:
-            self.attempted += 1
             if schema is None:
                 self.fail(f"{q}: raised")
-            elif self._verify(q, schema, rows):
-                self.work += 1
-        self.latencies = self.refresh_s
+            else:
+                why = self.oracle.mismatch(q, schema, rows)
+                if why:
+                    self.fail(why)
 
     def throughput(self) -> float:
         return self.work / self.span_s
@@ -385,9 +425,8 @@ class QueryMix(Workload):
         for q, dt, schema, _rows in self.results:
             if schema is not None:
                 per_query.setdefault(q, []).append(dt)
-        requests = [dt for dts in per_query.values() for dt in dts]
-        return {"request_p50_s": statistics.median(requests) if requests else None,
-                "requests": len(requests), "query_s": per_query}
+        return {"curation_pass_s": self.pass_s, "requests_checked": len(self.results),
+                "query_s": per_query}
 
 
 WORKLOADS = {
