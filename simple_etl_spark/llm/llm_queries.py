@@ -331,21 +331,31 @@ def llm_record_linkage(cat: Catalog) -> DataFrame:
 # Similarity search
 # ---------------------------------------------------------------------------
 
+# DuckDB spelling of the element canonicalization double →
+# decimal(12,10), for use inside an ``x -> ...`` lambda. Spark rounds
+# the double's printed digits HALF_UP; DuckDB 1.0's direct cast does
+# not (1.97509765625 → 1.9750976562 there, 1.9750976563 in Spark;
+# 1.00000000005 → 1.0000000000 vs 1.0000000001). Casting through
+# VARCHAR first makes DuckDB round the same printed digits HALF_UP.
+# Pinned by tests/test_similarity_exact.py.
+_DUCK_ELEM_DEC = "CAST(CAST(x AS VARCHAR) AS DECIMAL(12,10))"
+
 # Oracle arithmetic is UNNEST + SUM — never list_sum / a lambda fold
 # (version-dependent typing). Integral-tier oracle: the lineage after the element canonicalization
-# (double → decimal(12,10), HALF_UP in both engines) is pure integer
-# arithmetic. NO decimal scale-reduction casts appear anywhere — Spark
+# (double → decimal(12,10), HALF_UP in both engines via
+# _DUCK_ELEM_DEC) is pure integer arithmetic. NO decimal
+# scale-reduction casts appear anywhere — Spark
 # rounds those HALF_UP while DuckDB TRUNCATES (probed on duckdb 1.0:
 # cast(decimal(30,20) 1.0000000015 → decimal(12,9)) = 1.000000001) —
 # quantization is explicit abs + integer-div instead, and every
 # division operand is non-negative so Spark `div` (truncate) and
 # DuckDB `//` (floor) agree. See similarity.py "Integral
 # exact-ranking tier" for the units (_e9 = 10^-9, _e12 = pico).
-_IVEC_SQL = """
+_IVEC_SQL = f"""
 v AS (
     SELECT vec_id, label,
            list_transform(cast(embedding as double[]),
-               x -> CAST(CAST(CAST(x AS DECIMAL(12,10)) AS DECIMAL(26,10))
+               x -> CAST(CAST({_DUCK_ELEM_DEC} AS DECIMAL(26,10))
                          * CAST(10000000000 AS DECIMAL(12,0)) AS HUGEINT)) AS ie
     FROM embeddings
 ),
@@ -535,13 +545,13 @@ def llm_quantized_topk(cat: Catalog) -> DataFrame:
 
 @query(
     "llm_label_outliers",
-    oracle="""
+    oracle=f"""
     WITH el AS (
         SELECT vec_id, label, unnest(e) AS val,
                unnest(range(1, len(e) + 1)) AS pos
         FROM (SELECT vec_id, label,
                      list_transform(cast(embedding as double[]),
-                                    x -> cast(x as decimal(12,10))) AS e
+                                    x -> {_DUCK_ELEM_DEC}) AS e
               FROM embeddings)
     ),
     cent AS (
@@ -606,7 +616,7 @@ def llm_label_outliers(cat: Catalog) -> DataFrame:
     # decimal(30,20) accumulator) with the double-division cosine
     # exposed at the 6-dp discipline. k-means TRAINING stays
     # pytest-locked (NumPy reference + drift pin of the literal).
-    oracle=r"""WITH
+    oracle=rf"""WITH
 cents(cid, ce) AS (VALUES
         (0, [0.023642688312305073, 0.008970353845036803, 0.15521838595011123, -0.31688650409950625, 0.03147180818974308, -0.06923718378019929, -0.04111496695050159, 0.03304561464567617, 0.19809020310280234, -0.07604641445042652, -0.05993346203725498, 0.03524526175201056, -0.15423989799778312, -0.04869930096952214, -0.051785594007274505, -0.017256828299132245, 0.2124682287110797, 0.13975899409274506, 0.07031622344500697, 0.11057425385105235, -0.20695498523294822, 0.04500777018933122, -0.04133901124880827, -0.06997847358777305, 0.016129559740749762, 0.26942198738334433, 0.32803110878397485, -0.023292251444356777, -0.052340032520319525, 0.2440254735180953, -0.10532720640859354, 0.2223049705941523, 0.01853989076119037, -0.13914296058793044, 0.04808791278650299, -0.18073793952723213, -0.015770322738916227, 0.07340451138739942, 0.08730750690431253, 0.018284979026431062, 0.0017939301041925916, -0.009037097917831536, 0.013883600011845522, 0.006364735814950957, 0.0625854023422517, 0.10434608954003388, 0.10390646962573073, -0.18806953505263566, 0.02011670478922705, -0.1694245195559578, 0.00714783164727109, 0.08618913181104998, 0.03205694863291529, -0.1977882327549795, 0.08220013661748572, 0.06649508316024262, -0.03562918657323097, 0.02187512325642322, -0.247006575490941, -0.056647123840614606, -0.059750641598646466, 0.1323994865548135, 0.1458516166637642, -0.15606812257836922]::DOUBLE[]),
         (1, [-0.05948388140677254, -0.06296094835143778, 0.03590825247899053, -0.002625701820582873, 0.03770163787660806, 0.12437012260170893, -0.3299422834475696, -0.0650667553486238, -0.010622348819947914, -0.012947529431045674, -0.21219649734491441, 0.16006111796415676, 0.2513264914868802, -0.3077772989859233, 0.12862088407601033, -0.003933102815629401, -0.03264798659454915, -0.06804467078784318, 0.1404168588410578, -0.14702571638033798, 0.12278116445754127, 0.06081285051794635, -0.005305999540987739, -0.08675266594771605, 0.14920201056723625, 0.25294566721605993, -0.04439077762230428, -0.08214639254933553, -0.01844444502995847, 0.039877461088916266, -0.051886824770074155, 0.024538476538426595, 0.03092395202267272, -0.013035318688639679, 0.025286889089193097, 0.0054963355642670825, -0.17941613718344127, 0.05788558834173358, 0.06366834888701321, -0.2700838919350661, 0.03462342522438384, -0.14899207654051402, 0.07379339404249069, 0.0508003611081616, 0.10011201309028879, 0.06441271153076063, -0.12768916641676242, -0.050130397281033114, -0.22365466707706164, -0.30756140404718674, -0.07720547518902633, 0.03723346233398374, -0.07504590562392256, 0.013068979982851553, -0.0682789708200986, 0.13541350553894915, 0.17253773824031474, -0.012442062592246604, 0.14050868588883303, 0.0378126527775482, -0.06952114794648387, -0.02451677724539573, -0.15853025301898324, -0.03347048797013653]::DOUBLE[]),
@@ -645,7 +655,7 @@ cand AS (
 dv AS (
     SELECT vec_id,
            unnest(list_transform(cast(embedding as double[]),
-                                 x -> CAST(x AS DECIMAL(12,10)))) AS val,
+                                 x -> {_DUCK_ELEM_DEC})) AS val,
            unnest(range(1, len(embedding) + 1)) AS pos
     FROM embeddings
 ),
@@ -745,11 +755,11 @@ def _perturbed_embedding_corpus(cat: Catalog) -> DataFrame:
 # same recipe as _IVEC_SQL but sourced from the CTE instead of the
 # embeddings table (see the _IVEC_SQL comment for the engine-parity
 # rules: no decimal scale-reduction casts, non-negative `//` only).
-_IVEC_BASE_SQL = """
+_IVEC_BASE_SQL = f"""
 v2 AS (
     SELECT vec_id, label,
            list_transform(e,
-               x -> CAST(CAST(CAST(x AS DECIMAL(12,10)) AS DECIMAL(26,10))
+               x -> CAST(CAST({_DUCK_ELEM_DEC} AS DECIMAL(26,10))
                          * CAST(10000000000 AS DECIMAL(12,0)) AS HUGEINT)) AS ie
     FROM base
 ),
@@ -2097,7 +2107,7 @@ def _srp_oracle() -> str:
     WITH v AS (
         SELECT vec_id,
                list_transform(cast(embedding as double[]),
-                              x -> cast(x as decimal(12,10))) AS e
+                              x -> {_DUCK_ELEM_DEC}) AS e
         FROM embeddings
     ),
     el AS (
@@ -4855,8 +4865,7 @@ def llm_cap_audit(cat: Catalog) -> DataFrame:
     """,
     survey="LLM multimodal: video tier — synthesized lossless Y4M "
     "payloads through the real container demux + per-frame decode "
-    "(demux_video/decode_video_frame; MJPEG-AVI shares the same path "
-    "with JPEG frames, pytest-pinned)",
+    "(demux_video/decode_video_frame)",
 )
 def llm_video_features(cat: Catalog) -> DataFrame:
     """Drive the REAL video path end-to-end on the driver's corpus:

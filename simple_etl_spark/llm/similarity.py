@@ -410,7 +410,8 @@ def bucketed_topk(
 # on near-tie rows between Spark and an external oracle. This tier
 # removes the problem class instead of narrowing it: after the
 # parity-proven element canonicalization (float → double →
-# decimal(12,10), identical HALF_UP in Spark and DuckDB), every
+# decimal(12,10), identical HALF_UP in Spark and in the DuckDB
+# oracles' llm_queries._DUCK_ELEM_DEC), every
 # subsequent step is exact integer arithmetic — integer dot products,
 # explicit abs+integer-div truncation (NOT a decimal scale-reduction
 # cast: Spark rounds those HALF_UP while DuckDB truncates), and an

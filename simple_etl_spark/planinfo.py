@@ -2,10 +2,12 @@
 I'd want at 100 TB".
 
 `plan_summary` condenses `df.explain("formatted")` into operator
-counts (shuffle/broadcast exchanges, scans, joins by strategy) so
+counts (shuffle/broadcast exchanges, scans, joins by strategy,
+aggregates, Python/Arrow boundary nodes) so
 pipelines, tests, and notebooks can ASSERT plan shape ("this query
 must broadcast, one exchange max") instead of eyeballing explain
-output — the programmatic face of the tests/test_plans.py discipline.
+output — the programmatic face of the tests/test_plans.py discipline,
+and the marker set the registry sweep (tools/opt_sweep.py) records.
 Built on the public EXPLAIN statement only (thread-safe, no JVM
 handle caching).
 """
@@ -27,9 +29,20 @@ _COUNTERS = {
     "sort_merge_joins": r"\bSortMergeJoin\b",
     "broadcast_nested_loop_joins": r"\bBroadcastNestedLoopJoin\b",
     "cartesian_products": r"\bCartesianProduct\b",
+    "shuffled_hash_joins": r"\bShuffledHashJoin\b",
     "sorts": r"^\s*(?:[:+]|\|)*\s*[:+]- Sort\b",
     "generates": r"\bGenerate\b",
     "window_ops": r"\bWindow\b",
+    "hash_aggregates": r"\bHashAggregate\b",
+    "object_hash_aggregates": r"\bObjectHashAggregate\b",
+    "sort_aggregates": r"\bSortAggregate\b",
+    "take_ordered_and_project": r"\bTakeOrderedAndProject\b",
+    # Python/Arrow boundary nodes: rows leave the JVM here
+    "batch_eval_python": r"\bBatchEvalPython\b",
+    "arrow_eval_python": r"\bArrowEvalPython\b",
+    "map_in_pandas": r"\bMapInPandas\b",
+    "map_in_arrow": r"\bMapInArrow\b",
+    "flat_map_groups_in_pandas": r"\bFlatMapGroupsInPandas\b",
 }
 
 

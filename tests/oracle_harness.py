@@ -169,8 +169,9 @@ def duckdb_invariants() -> list[tuple[str, bool, str]]:
     q = lambda sql: con.execute(sql).fetchone()[0]  # noqa: E731
     checks = []
 
-    # 1. double→decimal casts round HALF away from zero (element
-    #    canonicalization decimal(12,10); money decimal(9,2))
+    # 1. double→decimal casts round HALF away from zero (money
+    #    decimal(9,2); the decimal(12,10) element canonicalization
+    #    casts through VARCHAR instead — llm_queries._DUCK_ELEM_DEC)
     checks.append((
         "double->decimal rounds half away from zero",
         str(q("SELECT CAST(CAST(-0.015 AS DOUBLE) AS DECIMAL(9,2))")) == "-0.02"

@@ -1,6 +1,6 @@
 """SQL-facing API surface: SQL scalar functions generated from the
-Column rule tables, the SQL-invocable frame-sample UDTF, and
-in-flight observe() metrics — each pinned against its DataFrame twin.
+Column rule tables and in-flight observe() metrics — each pinned
+against its DataFrame twin.
 """
 
 from __future__ import annotations
@@ -36,31 +36,6 @@ def test_sql_functions_match_column_twins(spark):
         gen_id("link").alias("i"),
     ).collect()
     assert [tuple(r) for r in via_sql] == [tuple(r) for r in via_col]
-
-
-def test_frame_sample_udtf_matches_mapinpandas(spark):
-    from simple_etl_spark.llm.multimodal import (
-        register_frame_sample_udtf,
-        sample_frames,
-    )
-
-    register_frame_sample_udtf(spark)
-    df = spark.createDataFrame(
-        [(1, b"A" * 100), (2, b"xyz" * 30)], "doc_id bigint, payload binary"
-    )
-    df.createOrReplaceTempView("binary_docs_udtf")
-    via_sql = {
-        (r["doc_id"], r["frame_idx"]): (r["frame_bytes"], r["frame_md5"])
-        for r in spark.sql(
-            "SELECT doc_id, s.* FROM binary_docs_udtf, "
-            "LATERAL sample_frames(payload, 32, 2) s"
-        ).collect()
-    }
-    via_df = {
-        (r["doc_id"], r["frame_idx"]): (r["frame_bytes"], r["frame_md5"])
-        for r in sample_frames(df, frame_size=32, stride=2).collect()
-    }
-    assert via_sql == via_df and via_sql
 
 
 def test_promote_with_metrics_single_action(spark, tmp_path):

@@ -289,3 +289,44 @@ def test_small_norm_contamination_matches_single_phase_verdict(spark):
     from simple_etl_spark.llm.similarity import threshold_key
     want2 = (1, ref2["score2_e12"]) if ref2["score2_e12"] >= threshold_key(0.9) else (0, None)
     assert out[2] == want2
+
+
+def _tie_probes() -> list[float]:
+    """Doubles where DuckDB's direct double→decimal(12,10) cast and
+    Spark's disagree: exact binary ties (odd k / 2^11 has eleven
+    decimals ending in 5) and eleven-digit decimal ties (the nearest
+    double sits just above or below the half), both signs."""
+    binary = [k / 2048 for k in range(1, 2 * 2048, 38)]  # odd k only
+    decimal = [float(f"{a}.{b:010d}5") for a in (0, 1, 7, 42)
+               for b in (0, 1, 9, 1234567890, 9999999999, 5000000000)]
+    vals = binary + decimal
+    return vals + [-v for v in vals]
+
+
+def test_oracle_element_cast_matches_spark_on_ties(spark):
+    """The DuckDB oracles spell the element canonicalization as
+    ``_DUCK_ELEM_DEC``; it must round exactly like Spark's
+    ``cast(x as decimal(12,10))`` on every tie, or an embedding
+    element on a tie moves an integral score by one unit."""
+    import duckdb
+
+    from simple_etl_spark.llm.llm_queries import _DUCK_ELEM_DEC
+
+    vals = _tie_probes()
+    spark_dec = [
+        r["d"] for r in spark.createDataFrame(
+            [(i, v) for i, v in enumerate(vals)], "i int, x double",
+        ).selectExpr("i", "cast(x as decimal(12,10)) AS d")
+        .orderBy("i").collect()
+    ]
+    con = duckdb.connect()
+    try:
+        duck_dec = con.execute(
+            f"SELECT list_transform($1::DOUBLE[], x -> {_DUCK_ELEM_DEC})",
+            [vals],
+        ).fetchone()[0]
+    finally:
+        con.close()
+    diffs = [(v, s, d) for v, s, d in zip(vals, spark_dec, duck_dec)
+             if s != d]
+    assert not diffs, diffs[:5]

@@ -3,10 +3,17 @@
 Times each query in the registry at a given data dir (default sf0.1)
 through the noop sink (full computation, no driver collect — guide
 §1.4), after warm-up, min-of-N; captures the formatted physical plan
-and counts the shape markers the optimization guide says to audit
-(Exchange, join strategies, Python-boundary nodes, scans without
-pushdown). Output: one JSON with per-query seconds + marker counts,
-plus optional per-query plan files for plans/r14/.
+and records its shape markers as ``planinfo.plan_summary`` counts them
+(exchanges, join strategies, aggregates, Python/Arrow boundary nodes;
+tree nodes only, each counted once). Output: one JSON with the
+session warm-up seconds (``warmup_s``) and, under ``queries``,
+per-query seconds + marker counts; plus optional per-query plan files
+for plans/r14/.
+
+Session warm-up (first parquet listing, JIT, the first schema
+resolutions) is paid once before the timed loop by an untimed build
+and noop pass of the first selected query, and reported as
+``warmup_s`` instead of inside that query's row.
 
 Build-time cost is measured separately from execution: a query whose
 constructor runs Spark jobs (collect of a skew profile, a sampled
@@ -24,53 +31,16 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-MARKERS = (
-    "Exchange",
-    "BroadcastExchange",
-    "BroadcastHashJoin",
-    "SortMergeJoin",
-    "ShuffledHashJoin",
-    "CartesianProduct",
-    "BroadcastNestedLoopJoin",
-    "BatchEvalPython",
-    "ArrowEvalPython",
-    "MapInPandas",
-    "MapInArrow",
-    "FlatMapGroupsInPandas",
-    "Window",
-    "Sort",
-    "HashAggregate",
-    "ObjectHashAggregate",
-    "SortAggregate",
-    "TakeOrderedAndProject",
-)
 
 # Streaming drains and mutation queries are excluded from the timing
 # sweep by default: they run checkpointed streams / rewrite snapshots,
 # so "warm min-of-N" is not meaningful and they dominate the sweep's
 # wall-clock. They are measured by their own harnesses.
 STREAMING_PREFIX = "stream_"
-
-
-def _plan_text(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def _markers(plan: str) -> dict[str, int]:
-    out = {}
-    for m in MARKERS:
-        n = len(re.findall(rf"\b{m}\b", plan))
-        if n:
-            out[m] = n
-    return out
 
 
 def main() -> None:
@@ -86,11 +56,11 @@ def main() -> None:
     args = ap.parse_args()
 
     from simple_etl_spark.engine import get_spark, tune_for_input
+    from simple_etl_spark.planinfo import plan_summary, plan_text
     from simple_etl_spark import queries as q
 
     spark = get_spark("opt-sweep-r14")
     tune_for_input(spark, args.dir)
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     names = list(q.queries())
     if args.only:
@@ -105,8 +75,19 @@ def main() -> None:
     if args.plans:
         os.makedirs(args.plans, exist_ok=True)
 
-    results: dict[str, dict] = {}
     fns = q.queries()
+    t0 = time.perf_counter()
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    if names:
+        spark.sparkContext.setJobDescription(f"opt_sweep: warm-up {names[0]}")
+        try:
+            fns[names[0]](spark, args.dir).write.format("noop").mode(
+                "overwrite").save()
+        except Exception:  # noqa: BLE001 — its timed row reports it
+            pass
+    warmup_s = round(time.perf_counter() - t0, 3)
+
+    results: dict[str, dict] = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"opt_sweep: {name}")
         row: dict = {}
@@ -114,8 +95,7 @@ def main() -> None:
             t0 = time.perf_counter()
             df = fns[name](spark, args.dir)
             row["build_s"] = round(time.perf_counter() - t0, 3)
-            plan = _plan_text(df)
-            row["markers"] = _markers(plan)
+            row["markers"] = plan_summary(df)
             if args.plans:
                 with open(
                     os.path.join(
@@ -123,7 +103,7 @@ def main() -> None:
                     ),
                     "w",
                 ) as fh:
-                    fh.write(plan)
+                    fh.write(plan_text(df))
             # warm-up (codegen, listing) then timed reps
             df.write.format("noop").mode("overwrite").save()
             best = 9e9
@@ -139,13 +119,14 @@ def main() -> None:
         print(f"{name}: {done}", flush=True)
 
     with open(args.out, "w") as fh:
-        json.dump(results, fh, indent=1, sort_keys=True)
+        json.dump({"warmup_s": warmup_s, "queries": results}, fh,
+                  indent=1, sort_keys=True)
     total = sum(r.get("exec_s", 0) for r in results.values())
     builds = sum(r.get("build_s", 0) for r in results.values())
     errs = [n for n, r in results.items() if "err" in r]
     print(
-        f"swept {len(results)} queries: exec_total={total:.1f}s "
-        f"build_total={builds:.1f}s errors={errs}"
+        f"swept {len(results)} queries: warmup={warmup_s:.1f}s "
+        f"exec_total={total:.1f}s build_total={builds:.1f}s errors={errs}"
     )
     spark.stop()
 
