@@ -80,11 +80,10 @@ def test_wav_codec_gates():
     struct.pack_into("<H", ieee16, fmt_at, 3)  # IEEE float, 16-bit: bogus
     with pytest.raises(ValueError, match="IEEE-float WAV bit depth"):
         decode_audio(bytes(ieee16))
-    for code in (2, 6, 7, 0x11):  # MS ADPCM, A-law, mu-law, IMA ADPCM
-        compressed = bytearray(good)
-        struct.pack_into("<H", compressed, fmt_at, code)
-        with pytest.raises(NotImplementedError, match=f"format {code}"):
-            decode_audio(bytes(compressed))
+    adpcm = bytearray(good)
+    struct.pack_into("<H", adpcm, fmt_at, 2)  # MS ADPCM decodes since
+    with pytest.raises(ValueError, match="4-bit"):  # r13 — but a
+        decode_audio(bytes(adpcm))  # 16-bit relabel is malformed
     mp3 = bytearray(good)
     struct.pack_into("<H", mp3, fmt_at, 0x55)  # MPEG Layer 3: gated
     with pytest.raises(NotImplementedError):
@@ -110,8 +109,7 @@ def test_audio_features_spark_path(spark):
             for i in range(16000)]  # 1 s @ 16 kHz mono
     wav = make_wav(tone, 16000, 1, 16)
     df = spark.createDataFrame(
-        [(1, bytearray(wav)), (2, bytearray(b"not audio")), (3, None),
-         (4, bytearray(b"FORM\x00\x00\x00\x04AIFF"))],
+        [(1, bytearray(wav)), (2, bytearray(b"not audio")), (3, None)],
         "doc_id bigint, payload binary",
     )
     rows = {r["doc_id"]: r for r in audio_features(df).collect()}
@@ -122,7 +120,6 @@ def test_audio_features_spark_path(spark):
     assert r["mean_abs"] == sum(abs(s) for s in tone) // len(tone)
     assert rows[2]["sample_rate"] is None  # junk -> NULL, not task death
     assert rows[3]["sample_rate"] is None  # NULL payload is data
-    assert rows[4]["sample_rate"] is None  # AIFF: no built-in decoder
 
 
 def test_encode_wav_roundtrips_through_decode():
@@ -272,6 +269,40 @@ def make_wav_fmt(fmt_payload, data):
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
+def make_wav_g711(raw_bytes, rate, channels, law):
+    code = 6 if law == "alaw" else 7
+    fmt = struct.pack("<HHIIHH", code, channels, rate,
+                      rate * channels, channels, 8)
+    return make_wav_fmt(fmt, raw_bytes)
+
+
+def test_g711_known_values_and_extremes():
+    """ITU-T expansion pinned by literals (mu-law 0x00 -> -32124,
+    0xFF -> 0; A-law 0xAA -> +32256 full scale, 0x55 -> -8)."""
+    _, _, _, mu = decode_audio(
+        make_wav_g711(bytes([0x00, 0x7F, 0x80, 0xFF]), 8000, 1, "ulaw"))
+    assert list(mu) == [-32124, 0, 32124, 0]
+    _, _, _, al = decode_audio(
+        make_wav_g711(bytes([0x00, 0x55, 0xD5, 0xAA, 0x2A]), 8000, 1, "alaw"))
+    assert list(al) == [-5504, -8, 8, 32256, -32256]
+
+
+def test_g711_full_range_matches_audioop():
+    """All 256 code points vs the CPython audioop reference (present
+    through 3.12; skipped where removed — the literal pins above stay
+    unconditional)."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        audioop = pytest.importorskip("audioop")
+    allb = bytes(range(256))
+    _, _, _, mu = decode_audio(make_wav_g711(allb, 8000, 1, "ulaw"))
+    assert list(mu) == list(struct.unpack("<256h", audioop.ulaw2lin(allb, 2)))
+    _, _, _, al = decode_audio(make_wav_g711(allb, 8000, 1, "alaw"))
+    assert list(al) == list(struct.unpack("<256h", audioop.alaw2lin(allb, 2)))
+
+
 def _extensible_fmt(code, channels, rate, bits):
     guid_tail = bytes([0x00, 0x00, 0x10, 0x00, 0x80, 0x00, 0x00, 0xAA,
                        0x00, 0x38, 0x9B, 0x71])
@@ -304,10 +335,9 @@ def test_extensible_wav_bad_guid_and_short_fmt_raise():
     short = _extensible_fmt(1, 1, 8000, 16)[:20]
     with pytest.raises(ValueError, match="too short|extension"):
         decode_audio(make_wav_fmt(short, b"\x00\x00"))
-    # an EXTENSIBLE wrapper around a compressed SubFormat hits the
-    # same codec gate as the bare format code
-    with pytest.raises(NotImplementedError, match="format 7"):
-        decode_audio(make_wav_fmt(_extensible_fmt(7, 1, 8000, 8), b"\x00"))
+    with pytest.raises(ValueError, match="G.711 WAV must be 8-bit"):
+        bad = struct.pack("<HHIIHH", 7, 1, 8000, 16000, 2, 16)
+        decode_audio(make_wav_fmt(bad, b"\x00\x00"))
 
 
 def test_ieee_float_huge_finite_saturates_not_crashes():
@@ -319,3 +349,353 @@ def test_ieee_float_huge_finite_saturates_not_crashes():
     _, _, _, got = decode_audio(
         make_wav_float([1e308, -1e308, 0.25], 8000, 1, bits=64))
     assert list(got) == [32767, -32768, 8192]
+
+
+# ---------------------------------------------------------------------------
+# IMA/DVI ADPCM (wFormatTag 0x0011) — VERDICT r10 #3
+# ---------------------------------------------------------------------------
+
+from simple_etl_spark.llm.multimodal import _ima_step_decode  # noqa: E402
+
+
+def _ima_encode(chans, spb):
+    """Test-side IMA ADPCM encoder: quantize each channel's samples
+    into nibbles while tracking the decoder-visible reconstruction in
+    lockstep — decode must reproduce ``recon`` EXACTLY. ``chans`` is a
+    list of per-channel int16 lists, each ``n_blocks*(spb-1)+?`` long;
+    samples are consumed (spb-1) per block after the header sample."""
+    from simple_etl_spark.llm.multimodal import _IMA_STEP
+
+    nch = len(chans)
+    per_block = spb - 1
+    assert per_block % 8 == 0
+    n_blocks = (len(chans[0]) + spb - 1) // spb
+    preds = [0] * nch
+    idxs = [0] * nch
+    recon = [[] for _ in range(nch)]
+    blocks = b""
+    pos = [0] * nch
+    for _ in range(n_blocks):
+        hdr = b""
+        bufs = [[] for _ in range(nch)]
+        for c in range(nch):
+            # block header: current predictor becomes sample 0
+            preds[c] = chans[c][pos[c]] if pos[c] < len(chans[c]) else 0
+            pos[c] += 1
+            hdr += struct.pack("<hBB", preds[c], idxs[c], 0)
+            recon[c].append(preds[c])
+        nibs = [[] for _ in range(nch)]
+        for c in range(nch):
+            for _ in range(per_block):
+                s = chans[c][pos[c]] if pos[c] < len(chans[c]) else 0
+                pos[c] += 1
+                step = _IMA_STEP[idxs[c]]
+                diff = s - preds[c]
+                nib = 8 if diff < 0 else 0
+                if diff < 0:
+                    diff = -diff
+                if diff >= step:
+                    nib |= 4
+                    diff -= step
+                if diff >= step >> 1:
+                    nib |= 2
+                    diff -= step >> 1
+                if diff >= step >> 2:
+                    nib |= 1
+                preds[c], idxs[c] = _ima_step_decode(nib, preds[c], idxs[c])
+                nibs[c].append(nib)
+                recon[c].append(preds[c])
+        body = b""
+        g = 0
+        while g < per_block:
+            for c in range(nch):
+                quad = nibs[c][g : g + 8]
+                body += bytes(
+                    (quad[k + 1] << 4) | quad[k] for k in range(0, 8, 2)
+                )
+            g += 8
+        blocks += hdr + body
+    return blocks, recon
+
+
+def make_wav_ima(blocks, rate, nch, spb, fact_frames=None, declared=None):
+    block_align = 4 * nch + (spb - 1) * nch // 2
+    fmt = struct.pack(
+        "<HHIIHHHH", 0x11, nch, rate,
+        rate * block_align // spb, block_align, 4, 2,
+        spb if declared is None else declared,
+    )
+    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    if fact_frames is not None:
+        chunks += b"fact" + struct.pack("<II", 4, fact_frames)[:8][:4] \
+            + struct.pack("<I", fact_frames)
+    chunks += b"data" + struct.pack("<I", len(blocks)) + blocks
+    if len(blocks) & 1:
+        chunks += b"\x00"
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def test_ima_adpcm_mono_roundtrip():
+    # two full blocks of a smooth deterministic tone (ADPCM is
+    # differential: a smooth signal is the meaningful tracking case)
+    import math
+
+    spb = 17  # 16 coded samples + header sample per block
+    sig = [int(3000 * math.sin(i / 4)) for i in range(2 * spb)]
+    blocks, recon = _ima_encode([sig], spb)
+    rate, ch, bits, samples = decode_audio(
+        make_wav_ima(blocks, 8000, 1, spb)
+    )
+    assert (rate, ch, bits) == (8000, 1, 4)
+    assert list(samples) == recon[0]
+    # the codec is lossy and the step size starts at 7, so the first
+    # swing is under-tracked while the index ramps — bound the error
+    # by the amplitude as a no-garbage sanity, and require the SECOND
+    # block (header re-anchors the predictor, index warmed) to track
+    # tightly
+    err = max(abs(a - b) for a, b in zip(recon[0], sig))
+    assert err < 3000
+    tail_err = max(
+        abs(a - b) for a, b in zip(recon[0][spb:], sig[spb:])
+    )
+    assert tail_err < 800
+
+
+def test_ima_adpcm_stereo_interleave():
+    spb = 9  # 8 coded samples per channel per block
+    left = [i * 300 for i in range(2 * spb)]
+    right = [-i * 250 for i in range(2 * spb)]
+    blocks, recon = _ima_encode([left, right], spb)
+    rate, ch, bits, samples = decode_audio(
+        make_wav_ima(blocks, 16000, 2, spb)
+    )
+    assert (rate, ch, bits) == (16000, 2, 4)
+    assert list(samples[0::2]) == recon[0]
+    assert list(samples[1::2]) == recon[1]
+
+
+def test_ima_adpcm_nibble_core_matches_audioop():
+    """audioop.adpcm2lin implements the same Intel/DVI inner loop
+    (high-nibble-first packing, zero initial state) — the free
+    reference oracle for the shift-ladder arithmetic, like G.711."""
+    audioop = pytest.importorskip("audioop")
+    import itertools
+
+    nibs = [n for pair in itertools.product(range(16), repeat=2)
+            for n in pair][:256]  # 256 nibbles, every value repeatedly
+    want = audioop.adpcm2lin(
+        bytes((nibs[i] << 4) | nibs[i + 1] for i in range(0, len(nibs), 2)),
+        2, None,
+    )[0]
+    want = list(struct.unpack(f"<{len(nibs)}h", want))
+    got, pred, idx = [], 0, 0
+    for nib in nibs:
+        pred, idx = _ima_step_decode(nib, pred, idx)
+        got.append(pred)
+    assert got == want
+
+
+def test_ima_adpcm_fact_trims_tail():
+    spb = 9
+    sig = [i * 100 for i in range(spb + 3)]  # 2nd block only 3 valid
+    blocks, recon = _ima_encode([sig], spb)
+    frames = spb + 3
+    _, _, _, samples = decode_audio(
+        make_wav_ima(blocks, 8000, 1, spb, fact_frames=frames)
+    )
+    assert list(samples) == recon[0][:frames]
+    # inconsistent fact count fails loud
+    with pytest.raises(ValueError, match="fact frame count"):
+        decode_audio(make_wav_ima(blocks, 8000, 1, spb, fact_frames=spb - 1))
+    with pytest.raises(ValueError, match="fact frame count"):
+        decode_audio(
+            make_wav_ima(blocks, 8000, 1, spb, fact_frames=3 * spb)
+        )
+
+
+def test_ima_adpcm_malformed_raises():
+    spb = 9
+    sig = [0] * spb
+    blocks, _ = _ima_encode([sig], spb)
+    # declared samples-per-block contradicts the block layout
+    with pytest.raises(ValueError, match="samples/block"):
+        decode_audio(make_wav_ima(blocks, 8000, 1, spb, declared=spb + 8))
+    # ragged data (not a whole number of blocks)
+    with pytest.raises(ValueError, match="whole number of blocks"):
+        decode_audio(make_wav_ima(blocks[:-1], 8000, 1, spb))
+    # step index out of range in the block header
+    bad = bytearray(blocks)
+    bad[2] = 89
+    with pytest.raises(ValueError, match="step index"):
+        decode_audio(make_wav_ima(bytes(bad), 8000, 1, spb))
+
+
+# ---------------------------------------------------------------------------
+# MS ADPCM (wFormatTag 0x0002) — r13
+# ---------------------------------------------------------------------------
+
+# independent copies of the published tables — the test must not share
+# the engine's constants
+_MS_COEFS = [(256, 0), (512, -256), (0, 0), (192, 64),
+             (240, 0), (460, -208), (392, -232)]
+_MS_ADAPT = [230, 230, 230, 230, 307, 409, 512, 614,
+             768, 614, 512, 409, 307, 230, 230, 230]
+
+
+def _tdiv(n, d):
+    q = abs(n) // d
+    return q if n >= 0 else -q
+
+
+def _ms_encode(chans, spb, pi=0, delta0=64):
+    """Greedy MS ADPCM test encoder tracking the decoder-visible
+    reconstruction in lockstep with its OWN copy of the documented
+    update rules — decode must reproduce ``recon`` exactly."""
+    nch = len(chans)
+    per = spb - 2
+    assert (per * nch) % 2 == 0
+    c1, c2 = _MS_COEFS[pi]
+    nblocks = (len(chans[0]) + spb - 1) // spb
+    blocks = b""
+    recon = [[] for _ in range(nch)]
+    pos = 0
+    for _ in range(nblocks):
+        s2, s1, deltas = [], [], []
+        for c in range(nch):
+            v2 = chans[c][pos] if pos < len(chans[c]) else 0
+            v1 = chans[c][pos + 1] if pos + 1 < len(chans[c]) else 0
+            s2.append(v2)
+            s1.append(v1)
+            deltas.append(delta0)
+            recon[c] += [v2, v1]
+        hdr = bytes([pi] * nch)
+        hdr += b"".join(struct.pack("<h", d) for d in deltas)
+        hdr += b"".join(struct.pack("<h", v) for v in s1)
+        hdr += b"".join(struct.pack("<h", v) for v in s2)
+        nibs = []
+        for i in range(per):
+            for c in range(nch):
+                at = pos + 2 + i
+                target = chans[c][at] if at < len(chans[c]) else 0
+                base = _tdiv(s1[c] * c1 + s2[c] * c2, 256)
+                sgn = max(-8, min(7, _tdiv(target - base, deltas[c])))
+                nib = sgn & 0x0F
+                pred = base + sgn * deltas[c]
+                pred = max(-32768, min(32767, pred))
+                s2[c] = s1[c]
+                s1[c] = pred
+                d = _tdiv(_MS_ADAPT[nib] * deltas[c], 256)
+                deltas[c] = 16 if d < 16 else d
+                recon[c].append(pred)
+                nibs.append(nib)
+        body = bytes(
+            (nibs[k] << 4) | nibs[k + 1] for k in range(0, len(nibs), 2)
+        )
+        blocks += hdr + body
+        pos += spb
+    return blocks, recon
+
+
+def make_wav_ms(blocks, rate, nch, spb, fact_frames=None):
+    block_align = 7 * nch + (spb - 2) * nch // 2
+    fmt = struct.pack(
+        "<HHIIHH", 2, nch, rate,
+        rate * block_align // spb, block_align, 4,
+    ) + struct.pack("<HHH", 32, spb, 7)
+    for c1, c2 in _MS_COEFS:
+        fmt += struct.pack("<hh", c1, c2)
+    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
+    if fact_frames is not None:
+        chunks += b"fact" + struct.pack("<II", 4, fact_frames)
+    chunks += b"data" + struct.pack("<I", len(blocks)) + blocks
+    if len(blocks) & 1:
+        chunks += b"\x00"
+    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+
+def test_ms_adpcm_mono_tracks_encoder_recon():
+    import math
+
+    spb = 18  # 2 header samples + 16 nibbles
+    sig = [int(4000 * math.sin(i / 5)) for i in range(3 * spb)]
+    blocks, recon = _ms_encode([sig], spb)
+    rate, ch, bits, got = decode_audio(make_wav_ms(blocks, 16000, 1, spb))
+    assert (rate, ch, bits) == (16000, 1, 4)
+    assert list(got) == recon[0]
+
+
+def test_ms_adpcm_stereo_nonzero_predictor_and_fact_trim():
+    import math
+
+    spb = 10
+    left = [int(2500 * math.sin(i / 3)) for i in range(2 * spb)]
+    right = [int(1500 * math.cos(i / 7)) for i in range(2 * spb)]
+    blocks, recon = _ms_encode([left, right], spb, pi=1, delta0=48)
+    # trim 3 frames off the tail via fact
+    frames = 2 * spb - 3
+    rate, ch, bits, got = decode_audio(
+        make_wav_ms(blocks, 8000, 2, spb, fact_frames=frames)
+    )
+    exp = []
+    for i in range(frames):
+        exp += [recon[0][i], recon[1][i]]
+    assert (ch, bits) == (2, 4)
+    assert list(got) == exp
+
+
+def test_ms_adpcm_clamps_and_adapts_delta():
+    """A hand-built block whose nibbles overshoot int16 in both
+    directions: the predictor must clamp at exactly +-32768/32767 and
+    the delta must adapt by adapt[nib]/256 (hand-computed chain)."""
+    # mono block: pi=0 (c1=256,c2=0), delta=20000, s1=30000, s2=100,
+    # nibbles +7 then -8 (one byte 0x78); spb = 4, block_align = 8
+    block = bytes([0]) + struct.pack("<hhh", 20000, 30000, 100) \
+        + bytes([0x78])
+    wav = make_wav_ms(block, 8000, 1, 4)
+    got = decode_audio(wav)[3]
+    # nib +7: pred = 30000 + 7*20000 -> clamp 32767;
+    #         delta -> trunc(614*20000/256) = 47968
+    # nib -8: pred = 32767 - 8*47968 -> clamp -32768
+    assert list(got) == [100, 30000, 32767, -32768]
+
+
+def test_ms_adpcm_malformed_fails_loud():
+    spb = 18
+    blocks, _ = _ms_encode([[0] * spb], spb)
+    good = make_wav_ms(blocks, 8000, 1, spb)
+    # predictor index outside the 7-pair table
+    bad = bytearray(good)
+    at = bytes(bad).index(b"data") + 8
+    bad[at] = 7
+    with pytest.raises(ValueError, match="predictor index"):
+        decode_audio(bytes(bad))
+    # ragged block
+    ragged = bytearray(good[:-2])
+    struct.pack_into(
+        "<I", ragged, bytes(ragged).index(b"data") + 4, len(blocks) - 2
+    )
+    with pytest.raises(ValueError, match="whole number of blocks"):
+        decode_audio(bytes(ragged))
+
+
+def test_ms_adpcm_truncated_fmt_raises_valueerror_not_struct_error():
+    """The fmt extension reads must be bounded by the ACTUAL chunk
+    length, not the declared cbSize — a truncated chunk previously
+    leaked struct.error through the feature wrapper's
+    (NotImplementedError, ValueError, IndexError) catch list,
+    killing the whole Arrow task (review r14)."""
+    spb = 18
+    block_align = 7 + (spb - 2) // 2
+    full_fmt = struct.pack(
+        "<HHIIHH", 2, 1, 8000, 8000 * block_align // spb,
+        block_align, 4,
+    ) + struct.pack("<HHH", 32, spb, 7)
+    for c1, c2 in _MS_COEFS:
+        full_fmt += struct.pack("<hh", c1, c2)
+    # cbSize claims 32 but the chunk stops after samples-per-block
+    with pytest.raises(ValueError, match="truncated"):
+        decode_audio(make_wav_fmt(full_fmt[:20], b""))
+    # coefficient table cut mid-pair: cbSize and wNumCoef both claim
+    # the full seven pairs
+    with pytest.raises(ValueError, match="truncated"):
+        decode_audio(make_wav_fmt(full_fmt[:30], b""))

@@ -2,8 +2,9 @@
 random inputs through encode→decode must reproduce exactly, and junk
 behind any magic must fail with ValueError/NotImplementedError. These
 are the adversarial complement to the structured fixtures — the
-generators explore block-size edges, bit-depth extremes, and
-sample-domain corners no hand-written case covers."""
+generators explore block-size edges, bit-depth extremes, LZW
+dictionary boundaries, and sample-domain corners no hand-written case
+covers."""
 
 from __future__ import annotations
 
@@ -15,6 +16,8 @@ from hypothesis import strategies as st
 sys.path.insert(0, "tests")
 
 from simple_etl_spark.llm.multimodal import (
+    _gif_lzw,
+    _tiff_lzw,
     decode_audio,
     decode_image,
     demux_video,
@@ -34,6 +37,27 @@ def test_flac_verbatim_roundtrip_property(pcm, rate, block):
         encode_flac_verbatim(pcm, rate, 16, block_size=block))
     assert (r, c, b) == (rate, 1, 16)
     assert list(got) == pcm
+
+
+@settings(max_examples=40, deadline=None)
+@given(payload=st.binary(min_size=1, max_size=1500))
+def test_tiff_lzw_roundtrip_property(payload):
+    from tests.test_tiff import tiff_lzw
+
+    assert _tiff_lzw(tiff_lzw(payload), len(payload)) == payload
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    idx=st.lists(st.integers(0, 15), min_size=1, max_size=1500),
+    min_code=st.sampled_from([4, 5]),
+)
+def test_gif_lzw_roundtrip_property(idx, min_code):
+    from tests.test_gif import lzw_compress
+
+    data = bytes(idx)
+    assert bytes(_gif_lzw(lzw_compress(data, min_code), min_code,
+                          len(data))) == data
 
 
 @settings(max_examples=25, deadline=None)
@@ -59,12 +83,11 @@ def test_decoders_never_crash_on_junk_property(junk):
     or raise ValueError/NotImplementedError — never IndexError,
     struct.error, or a hang."""
     for magic in (b"", b"fLaC", b"\x89PNG\r\n\x1a\n", b"YUV4MPEG2 ",
-                  b"RIFF\x00\x00\x00\x00WAVE",
-                  # formats without a built-in decoder
-                  b"\xff\xd8\xff", b"GIF87a", b"GIF89a", b"II*\x00",
-                  b"MM\x00*", b"BM", b"P5", b"P6",
+                  b"RIFF\x00\x00\x00\x00WAVE", b"GIF87a", b"GIF89a",
+                  b"II*\x00", b"MM\x00*", b"BM", b"P5", b"P6",
                   b"FORM\x00\x00\x01\x00AIFF", b"FORM\x00\x00\x01\x00AIFC",
-                  b"RIFF\x00\x00\x00\x00AVI "):
+                  # formats without a built-in decoder
+                  b"\xff\xd8\xff", b"RIFF\x00\x00\x00\x00AVI "):
         for fn in (decode_image, decode_audio):
             try:
                 fn(magic + junk)
@@ -89,6 +112,51 @@ def test_flac_verbatim_8bit_roundtrip_property(pcm, block):
         encode_flac_verbatim(pcm, 8000, 8, block_size=block))
     assert (r, c, b) == (8000, 1, 8)
     assert list(got) == pcm
+
+
+@settings(max_examples=30, deadline=None)
+@given(
+    n=st.integers(1, 120),
+    nch=st.sampled_from([1, 2]),
+    pi=st.integers(0, 6),
+    delta0=st.integers(16, 4096),
+    data=st.data(),
+)
+def test_ms_adpcm_roundtrip_property(n, nch, pi, delta0, data):
+    from tests.test_audio import _ms_encode, make_wav_ms
+
+    per = 2 * ((n + 1) // 2)  # even nibble count per channel
+    spb = per + 2
+    chans = [
+        [data.draw(st.integers(-32768, 32767)) for _ in range(spb)]
+        for _ in range(nch)
+    ]
+    blocks, recon = _ms_encode(chans, spb, pi=pi, delta0=delta0)
+    got = decode_audio(make_wav_ms(blocks, 8000, nch, spb))[3]
+    exp = []
+    for i in range(spb):
+        for c in range(nch):
+            exp.append(recon[c][i])
+    assert list(got) == exp
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    w=st.integers(1, 16),
+    h=st.integers(1, 12),
+    comp=st.sampled_from([1, 5, 8, 32773]),
+    predictor=st.sampled_from([1, 2]),
+    spp=st.sampled_from([1, 3]),
+    data=st.data(),
+)
+def test_tiff_predictor_codec_matrix_property(w, h, comp, predictor,
+                                              spp, data):
+    from tests.test_tiff import build_tiff
+
+    px = bytes(data.draw(st.integers(0, 255)) for _ in range(w * h * spp))
+    t = build_tiff(w, h, px, spp=spp, photo=2 if spp == 3 else 1,
+                   comp=comp, predictor=predictor)
+    assert decode_image(t) == (w, h, spp, px)
 
 
 @settings(max_examples=25, deadline=None)
@@ -141,3 +209,23 @@ def test_y4m_high_depth_scaling_property(w, h, depth, data):
         px[i * 3] == px[i * 3 + 1] == px[i * 3 + 2] == exp[i]
         for i in range(w * h)
     )
+
+
+@settings(max_examples=40, deadline=None)
+@given(junk=st.binary(min_size=0, max_size=200))
+def test_bmp_and_rle_junk_never_crash_property(junk):
+    """Random bytes behind a BMP header shell (palette depths, RLE
+    compressions) must decode or raise — never IndexError/KeyError."""
+    import struct
+
+    for bpp, comp in ((8, 0), (8, 1), (4, 2), (4, 0), (1, 0), (24, 0)):
+        used = min(1 << bpp, 4)
+        table = b"\x00\x01\x02\x00" * used
+        off = 14 + 40 + len(table)
+        dib = struct.pack("<IiiHHIIiiII", 40, 5, 4, 1, bpp, comp,
+                          len(junk), 0, 0, used, 0)
+        head = struct.pack("<2sIHHI", b"BM", off + len(junk), 0, 0, off)
+        try:
+            decode_image(head + dib + table + junk)
+        except (ValueError, NotImplementedError):
+            pass
