@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from simple_etl_spark.functions.clean import gen_id
 from simple_etl_spark.functions.text import build_search_index
+from simple_etl_spark.observability import observed_counts
 from simple_etl_spark.operators.medallion import gold_view, silver_from_bronze
 from simple_etl_spark.operators.merge import insert_if_absent, upsert_latest_wins
 from simple_etl_spark.sources.http_source import (
@@ -37,7 +38,7 @@ from simple_etl_spark.sources.http_source import (
     fetch_contents,
 )
 from simple_etl_spark.sources.kafka import to_kafka_frame
-from simple_etl_spark.sources.table_store import read_table, write_table
+from simple_etl_spark.sources.table_store import read_table, table_rows, write_table
 
 
 def _transport_roundtrip(raw: DataFrame) -> DataFrame:
@@ -59,7 +60,11 @@ def run_batch_pipeline(
     source: str = "cnn",
 ) -> dict:
     """Run the complete E1 batch ETL; returns the reference's tally
-    dict (`main.py:25-33`)."""
+    dict (`main.py:25-33`).
+
+    The crawl runs once, inside the bronze write, which also counts it
+    (an observation on the crawled frame); the layer tallies are the
+    committed snapshots' manifest row counts, not re-scans."""
     bronze_path = os.path.join(warehouse, "bronze")
     silver_path = os.path.join(warehouse, "silver")
     gold_path = os.path.join(warehouse, "gold")
@@ -67,17 +72,16 @@ def run_batch_pipeline(
 
     # S1 + S2: listing scan (driver, tiny) + distributed content fan-out
     listing = crawl_listing(spark, pages, listing_fetcher)
-    raw = (
+    raw, crawl_obs = observed_counts(
         fetch_contents(listing, content_fetcher)
         .withColumn("id", gen_id(F.col("link")))
         .withColumn("source", F.lit(source))
-        .withColumn("created_at", F.current_timestamp())
+        .withColumn("created_at", F.current_timestamp()),
+        "crawled",
     )
-    crawled = raw.count()
 
     # S3/S4: transport serialization round-trip
     consumed = _transport_roundtrip(raw)
-    kafka_sent = crawled  # every crawled row is serialized
 
     # bronze: S6 insert-if-absent (replays/re-crawls are no-ops);
     # the snapshot store makes the read-merge-write safe and atomic
@@ -88,8 +92,9 @@ def run_batch_pipeline(
         else consumed
     )
     write_table(bronze, bronze_path)
+    crawled = crawl_obs.get["rows"]  # the write above ran the crawl
+    kafka_sent = crawled  # every crawled row is serialized
     bronze = read_table(spark, bronze_path)
-    bronze_saved = bronze.count()
 
     # silver: clean + validate + S7 latest-wins upsert
     promoted = silver_from_bronze(bronze)
@@ -103,7 +108,6 @@ def run_batch_pipeline(
     silver = silver.withColumn("processed", F.lit(True))
     write_table(silver, silver_path)
     silver = read_table(spark, silver_path)
-    silver_processed = silver.count()
 
     # gold: virtual view materialized for downstream consumers,
     # date-partitioned so analytics prune to their date range and
@@ -111,18 +115,18 @@ def run_batch_pipeline(
     gold = gold_view(silver)
     write_table(gold, gold_path, partition_by=["publish_date"])
     gold = read_table(spark, gold_path)
-    gold_processed = gold.count()
 
     # S9: search index (the ES bulk sink as a posting-list table)
     postings = build_search_index(gold)
     write_table(postings, index_path)
+    gold_processed = table_rows(spark, gold_path)
     es_saved = gold_processed  # every gold doc is indexed
 
     return {
         "crawled": crawled,
         "kafka_sent": kafka_sent,
-        "bronze_saved": bronze_saved,
-        "silver_processed": silver_processed,
+        "bronze_saved": table_rows(spark, bronze_path),
+        "silver_processed": table_rows(spark, silver_path),
         "gold_processed": gold_processed,
         "es_saved": es_saved,
         "pg_saved": gold_processed,
@@ -169,20 +173,28 @@ def run_streaming_pipeline(
     latest-wins merges as the batch path (ST1-ST6); after the stream
     drains (availableNow when ``trigger`` is None) the gold snapshot
     and search index are refreshed and the reference's stats dict is
-    returned. With a processing-time ``trigger`` the query runs until
+    returned, its counts read from the committed snapshots' manifests.
+    With a processing-time ``trigger`` the query runs until
     externally stopped and the caller refreshes gold on its own
-    cadence (the reference's */15 min view refresh)."""
+    cadence (the reference's */15 min view refresh).
+
+    The ``processed`` flag (ST7) is set where rows enter silver: a
+    drain promotes every row it merges to gold right after, so its
+    silver merge writes them ``processed = true`` in the same commit;
+    a continuous consumer writes ``processed = false``. Silver rows a
+    drain does not merge keep the flag they were committed with."""
     from simple_etl_spark.streaming.medallion_stream import run_stream
 
     bronze_path = os.path.join(warehouse, "bronze")
     silver_path = os.path.join(warehouse, "silver")
+    gold_path = os.path.join(warehouse, "gold")
 
     query = run_stream(
         stream_df,
         bronze_path,
         silver_path,
         checkpoint,
-        clean=silver_from_bronze,
+        clean=silver_from_bronze if trigger is not None else _silver_for_gold,
         key="id",
         order_col="created_at",
         trigger=trigger,
@@ -191,17 +203,18 @@ def run_streaming_pipeline(
         return {"query": query}
     query.awaitTermination(timeout_sec)
 
-    silver = read_table(spark, silver_path).withColumn("processed", F.lit(True))
-    write_table(silver, silver_path)
-    silver = read_table(spark, silver_path)
-
-    gold = gold_view(silver)
-    write_table(gold, os.path.join(warehouse, "gold"))
-    gold = read_table(spark, os.path.join(warehouse, "gold"))
+    write_table(gold_view(read_table(spark, silver_path)), gold_path)
+    gold = read_table(spark, gold_path)
     write_table(build_search_index(gold), os.path.join(warehouse, "search_index"))
 
     return {
-        "bronze_saved": read_table(spark, bronze_path).count(),
-        "silver_processed": silver.count(),
-        "gold_processed": gold.count(),
+        "bronze_saved": table_rows(spark, bronze_path),
+        "silver_processed": table_rows(spark, silver_path),
+        "gold_processed": table_rows(spark, gold_path),
     }
+
+
+def _silver_for_gold(bronze: DataFrame) -> DataFrame:
+    """A drain's silver rows: cleaned, and marked processed because
+    the drain promotes them to gold right after its merge."""
+    return silver_from_bronze(bronze).withColumn("processed", F.lit(True))

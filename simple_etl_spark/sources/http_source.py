@@ -56,13 +56,21 @@ def crawl_listing(
     fetcher: ListingFetcher = default_listing_fetcher,
 ) -> DataFrame:
     """S1: fetch pages 1..N on the driver (cheap, tiny payloads) and
-    land them as a typed DataFrame."""
+    land them as a typed DataFrame.
+
+    The cards are built into one Arrow table (a local relation, no
+    Python-RDD hop) and land as ONE partition, so the content fan-out
+    downstream starts one Python runner, not one per slice. A
+    network-bound crawl fans out with
+    ``fetch_contents(..., parallelism=N)``."""
+    import pyarrow as pa
+
     rows = [card for page in range(1, pages + 1) for card in fetcher(page)]
-    return spark.createDataFrame(
-        [(r.get("title"), r.get("link"), r.get("image"), r.get("date_raw"),
-          r.get("topic")) for r in rows],
-        LISTING_SCHEMA,
+    table = pa.table(
+        {f.name: pa.array([r.get(f.name) for r in rows], pa.string())
+         for f in LISTING_SCHEMA.fields}
     )
+    return spark.createDataFrame(table, LISTING_SCHEMA).coalesce(1)
 
 
 def fetch_contents(
@@ -74,7 +82,13 @@ def fetch_contents(
     fetches its links serially (per-task politeness); cluster-wide
     concurrency = number of tasks, the distributed analog of the
     reference's Semaphore(10). Null contents are dropped
-    (crawler/cnn.py:77-79)."""
+    (crawler/cnn.py:77-79).
+
+    By default the fan-out keeps the listing's partitioning, which for
+    :func:`crawl_listing` is one task: right when fetches are cheap,
+    where each extra Python runner costs more than it saves. Pass
+    ``parallelism`` for network-bound crawls, to fetch over that many
+    tasks."""
     out_schema = StructType(listing.schema.fields + [StructField("content", StringType())])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

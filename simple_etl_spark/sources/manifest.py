@@ -12,6 +12,12 @@ Spark ONLY the surviving files.
 Composes with Z-order compaction (sources/layout.py, table_store.
 compact(zorder_by=...)): the clustered layout is what makes per-file
 intervals narrow, the manifest is what makes skipping free.
+
+The manifest is also the table's metadata path (Dremel, VLDB 2020:
+serve schema and row counts from metadata, not from data scans): each
+file's exact footer row count, and the snapshot's read schema, so
+``table_store`` reads a snapshot and counts its rows without a Spark
+job.
 """
 
 from __future__ import annotations
@@ -27,6 +33,31 @@ MANIFEST_NAME = "_manifest.json"
 # with a total order that JSON round-trips losslessly
 _STAT_TYPES = {"INT32", "INT64", "FLOAT", "DOUBLE", "BYTE_ARRAY"}
 
+# footer key holding the writer's Spark schema as JSON: the source
+# Spark's own schema inference reads
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _nullable(dtype):
+    """``DataType.asNullable`` on a Spark JSON type: every field, array
+    element and map value nullable, as Spark reads a file source (the
+    footer records the writer's ``nullable: false`` columns)."""
+    if not isinstance(dtype, dict):
+        return dtype  # a primitive type name
+    kind = dtype["type"]
+    if kind == "struct":
+        fields = [{**f, "nullable": True, "type": _nullable(f["type"])}
+                  for f in dtype["fields"]]
+        return {**dtype, "fields": fields}
+    if kind == "array":
+        return {**dtype, "containsNull": True,
+                "elementType": _nullable(dtype["elementType"])}
+    if kind == "map":
+        return {**dtype, "valueContainsNull": True,
+                "keyType": _nullable(dtype["keyType"]),
+                "valueType": _nullable(dtype["valueType"])}
+    return dtype
+
 
 def write_manifest(snapshot_path: str) -> dict:
     """Scan every parquet file's footer once and persist per-file
@@ -34,10 +65,18 @@ def write_manifest(snapshot_path: str) -> dict:
     compaction time (the write already paid the I/O), never at query
     time. Returns the manifest dict.
 
+    Besides the per-file stats and row counts it records ``schema``,
+    the Spark JSON read schema, when every file's footer carries the
+    same Spark schema and no file sits under a Hive partition
+    directory: partition column types come from Spark's inference over
+    the directory names, which the footers cannot vouch for, so a
+    partitioned snapshot keeps inferring.
+
     At cluster scale this is a distributed pass (footers read by
     executors, stats reduced to the driver); at manifest sizes of one
     row per file it stays a metadata object even for million-file
     tables."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     relpaths = []
@@ -48,9 +87,11 @@ def write_manifest(snapshot_path: str) -> dict:
                     os.path.relpath(os.path.join(root, n), snapshot_path)
                 )
     files = {}
+    schemas = set()
     for entry in sorted(relpaths):
         fpath = os.path.join(snapshot_path, entry)
         md = pq.ParquetFile(fpath).metadata
+        schemas.add((md.metadata or {}).get(SPARK_SCHEMA_KEY))
         cols: dict[str, dict] = {}
         # a column whose stats are unusable in ANY row group must be
         # recorded stat-less for the WHOLE file: folding only the
@@ -71,13 +112,22 @@ def write_manifest(snapshot_path: str) -> dict:
                 ):
                     bad.add(name)
                     continue
-                mn, mx = s.min, s.max
+                try:
+                    mn, mx = s.min, s.max
+                except pa.ArrowNotImplementedError:
+                    bad.add(name)  # e.g. an INT64-backed decimal
+                    continue
                 if isinstance(mn, bytes):
                     try:
                         mn, mx = mn.decode("utf-8"), mx.decode("utf-8")
                     except UnicodeDecodeError:
                         bad.add(name)
                         continue
+                if not isinstance(mn, (int, float, str)):
+                    # dates and timestamps have no JSON form a filter
+                    # bound compares with: stat-less, like the above
+                    bad.add(name)
+                    continue
                 if name in cols:
                     cols[name] = {
                         "min": min(cols[name]["min"], mn),
@@ -89,6 +139,9 @@ def write_manifest(snapshot_path: str) -> dict:
             cols.pop(name, None)
         files[entry] = {"columns": cols, "rows": md.num_rows}
     manifest = {"version": 1, "files": files}
+    if (len(schemas) == 1 and None not in schemas
+            and not any(os.path.dirname(e) for e in relpaths)):
+        manifest["schema"] = _nullable(json.loads(schemas.pop()))
     tmp = os.path.join(snapshot_path, MANIFEST_NAME + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(manifest, fh)

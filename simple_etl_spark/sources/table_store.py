@@ -10,6 +10,17 @@ snapshot, a crashed write is invisible, and the read-modify-write
 merge never touches the files it is scanning. At 100 TB the data copy
 is the merge itself (unavoidable without a row-level format); the
 pointer swap stays O(1).
+
+Every committed snapshot carries a ``_manifest.json``
+(sources/manifest.py), written before the pointer swap: per-file
+column min/max, exact footer row counts and the read schema. Reads go
+through :func:`read_table` / :func:`read_table_at`, which hand Spark
+the recorded schema, so resolving a snapshot launches no
+schema-inference job; :func:`table_rows` answers row counts from the
+manifest instead of a scan. A snapshot whose manifest (or its schema)
+is missing — a Hive-partitioned one, one written before manifests
+carried schemas, or one whose manifest write failed — is inferred and
+counted by Spark as before.
 """
 
 from __future__ import annotations
@@ -19,6 +30,9 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from simple_etl_spark.sources.manifest import load_manifest, write_manifest
 
 _POINTER = "_VERSION"
 _LOCK = "_COMMIT_LOCK"
@@ -103,9 +117,37 @@ def table_path(base: str) -> str | None:
     return os.path.join(base, f"v{v}") if v is not None else None
 
 
+def _read_snapshot(spark: SparkSession, path: str) -> DataFrame:
+    """Read one snapshot directory, with the schema its manifest
+    recorded at commit (no inference job); infer when there is none."""
+    manifest = load_manifest(path)
+    schema = manifest.get("schema") if manifest else None
+    reader = spark.read.schema(StructType.fromJson(schema)) if schema else spark.read
+    return reader.parquet(path)
+
+
+def _snapshot_rows(spark: SparkSession, path: str) -> int:
+    """Rows in one snapshot: the manifest's footer row counts (exact),
+    or a count() when the snapshot has no manifest."""
+    manifest = load_manifest(path)
+    if manifest is None:
+        return _read_snapshot(spark, path).count()
+    return sum(f["rows"] for f in manifest["files"].values())
+
+
 def read_table(spark: SparkSession, base: str) -> DataFrame | None:
+    """The current snapshot, or None if the table was never committed."""
     path = table_path(base)
-    return spark.read.parquet(path) if path else None
+    return _read_snapshot(spark, path) if path else None
+
+
+def table_rows(spark: SparkSession, base: str) -> int:
+    """Row count of the current snapshot, read from its manifest
+    without a scan. Raises FileNotFoundError if never committed."""
+    path = table_path(base)
+    if path is None:
+        raise FileNotFoundError(f"no committed snapshot under {base}")
+    return _snapshot_rows(spark, path)
 
 
 def list_versions(base: str) -> list[int]:
@@ -144,7 +186,7 @@ def read_table_at(spark: SparkSession, base: str, version: int) -> DataFrame:
             f"version {version} not on disk under {base} "
             f"(available: {list_versions(base)})"
         )
-    return spark.read.parquet(path)
+    return _read_snapshot(spark, path)
 
 
 def write_table(
@@ -184,26 +226,27 @@ def commit_snapshot(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-    # lift per-file min/max into the snapshot's stats manifest BEFORE
-    # the pointer swap: every committed snapshot supports planning-time
-    # file skipping (sources/manifest.py), and a crash between write
-    # and swap leaves no manifest-less committed state
-    try:
-        from simple_etl_spark.sources.manifest import write_manifest
-
-        write_manifest(path)
-    except Exception:
-        # stats are an optimization — a commit must never fail on them;
-        # read_pruned raises loudly if the manifest is absent
-        pass
-    _swap_pointer(base, v)
+    _commit(base, v)
     return path
 
 
-def _swap_pointer(base: str, v: int) -> None:
-    """The commit point: replace the pointer file atomically (POSIX
-    os.replace). Shared by every committing path so the protocol has
-    exactly one implementation."""
+def _commit(base: str, v: int) -> None:
+    """Seal snapshot ``v{v}`` and make it current. Shared by every
+    committing path so the protocol has exactly one implementation.
+
+    The manifest (per-file stats, row counts, read schema) is written
+    BEFORE the pointer swap, so every committed snapshot supports
+    planning-time file skipping and metadata reads, and a crash
+    between write and swap leaves no manifest-less committed state.
+    The swap is the commit point: the pointer file is replaced
+    atomically (POSIX os.replace)."""
+    try:
+        write_manifest(os.path.join(base, f"v{v}"))
+    except Exception:
+        # the manifest is an optimization — a commit must never fail
+        # on it; reads fall back to inference and counts to a scan,
+        # and read_pruned raises loudly if the manifest is absent
+        pass
     tmp = _pointer_file(base) + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(str(v))
@@ -264,7 +307,7 @@ def _purge_locked(spark, base, col, days, anchor, dt, shutil) -> dict:
         if e.is_dir() and e.name.startswith(part_prefix)
     ]
 
-    df = spark.read.parquet(cur_path)
+    df = _read_snapshot(spark, cur_path)
     if anchor is None:
         from pyspark.sql import functions as F
 
@@ -280,7 +323,10 @@ def _purge_locked(spark, base, col, days, anchor, dt, shutil) -> dict:
 
     if part_dirs:
         dropped = []
-        os.makedirs(new_path, exist_ok=True)
+        # a crashed uncommitted write may have left this version's
+        # directory behind; its files must not join the snapshot
+        shutil.rmtree(new_path, ignore_errors=True)
+        os.makedirs(new_path)
         for entry in part_dirs:
             raw = entry.name[len(part_prefix):]
             keep_it = True
@@ -309,7 +355,7 @@ def _purge_locked(spark, base, col, days, anchor, dt, shutil) -> dict:
         dropped = []
         mode = "filter-rewrite"
 
-    _swap_pointer(base, v)
+    _commit(base, v)
     return {
         "version": v,
         "path": new_path,
@@ -380,7 +426,7 @@ def compact(
             raise FileNotFoundError(f"no committed snapshot under {base}")
         files_before, total = _stats(cur)
         nfiles = max(1, -(-total // target_file_bytes))  # ceil
-        df = spark.read.parquet(cur)
+        df = _read_snapshot(spark, cur)
         if zorder_by:
             from pyspark.sql import functions as F
 
@@ -536,8 +582,8 @@ def delete_by_keys(
         cur = table_path(base)
         if cur is None:
             raise FileNotFoundError(f"no committed snapshot under {base}")
-        df = spark.read.parquet(cur)
-        before = df.count()
+        df = _read_snapshot(spark, cur)
+        before = _snapshot_rows(spark, cur)
         k = keys.select(
             *[F.col(c).alias(f"_del_{c}") for c in key_cols]
         ).distinct()
@@ -547,7 +593,7 @@ def delete_by_keys(
         )
         kept = df.join(F.broadcast(k), cond, "left_anti")
         path = commit_snapshot(kept, base, partition_by)
-        after = spark.read.parquet(path).count()
+        after = _snapshot_rows(spark, path)
     return {
         "version": int(os.path.basename(path)[1:]),
         "path": path,

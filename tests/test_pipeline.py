@@ -40,6 +40,13 @@ CONTENT = {
 }
 
 
+# bronze-shaped article rows, as the streaming consumer reads them
+STREAM_SCHEMA = (
+    "id string, title string, link string, image string, date_raw string, "
+    "topic string, content string, source string, created_at timestamp"
+)
+
+
 def _listing(page: int) -> list[dict]:
     return ARTICLES.get(page, [])
 
@@ -167,10 +174,6 @@ def test_streaming_pipeline_end_to_end(spark, tmp_path):
 
     wh = str(tmp_path / "swh")
     src = str(tmp_path / "stream_src")
-    schema = (
-        "id string, title string, link string, image string, date_raw string, "
-        "topic string, content string, source string, created_at timestamp"
-    )
     t = dt.datetime(2024, 2, 5, 8, 0)
     rows = [
         ("id1", "Uji Satu", "https://x/n/1", "i1",
@@ -180,8 +183,8 @@ def test_streaming_pipeline_end_to_end(spark, tmp_path):
          "Senin, 05 Februari 2024 09:00 WIB", "teknologi", "Konten lain. " * 30,
          "cnn", t),
     ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
+    spark.createDataFrame(rows, STREAM_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+    stream = spark.readStream.schema(STREAM_SCHEMA).parquet(src)
     tally = run_streaming_pipeline(
         spark, stream, wh, checkpoint=str(tmp_path / "ckpt")
     )
@@ -467,3 +470,111 @@ def test_delete_by_keys_null_keys_and_partitions(spark, tmp_path):
     assert any(
         n.startswith("part=") for n in os.listdir(table_path(base))
     )
+
+
+def test_batch_pipeline_fetches_each_link_once(spark, warehouse, tmp_path):
+    """The crawl runs once per run: its count rides the bronze write
+    instead of re-running the content fan-out."""
+    log = str(tmp_path / "fetches.log")
+    bodies = dict(CONTENT)
+
+    def logged_fetch(link: str) -> str | None:
+        with open(log, "a") as fh:
+            fh.write(link + "\n")
+        return bodies.get(link)
+
+    links = sorted(c["link"] for cards in ARTICLES.values() for c in cards)
+    for run in (1, 2):
+        tally = run_batch_pipeline(
+            spark, warehouse, pages=2, listing_fetcher=_listing,
+            content_fetcher=logged_fetch,
+        )
+        assert tally == {"crawled": 3, "kafka_sent": 3, "bronze_saved": 3,
+                         "silver_processed": 3, "gold_processed": 3,
+                         "es_saved": 3, "pg_saved": 3}
+        with open(log) as fh:
+            assert sorted(fh.read().split()) == sorted(links * run)
+
+
+def _feed_rows(hour: int, n: int) -> list[tuple]:
+    import datetime as dt
+
+    t = dt.datetime(2024, 2, 5, hour, 0)
+    return [
+        (f"id{i}", f"Uji Artikel {i}", f"https://x/n/{i}", f"i{i}",
+         "Senin, 05 Februari 2024 08:00 WIB", "nasional",
+         f"Konten uji versi {hour}. " * 30, "cnn", t)
+        for i in range(n)
+    ]
+
+
+def _jobs_between(spark, body) -> int:
+    """Spark jobs launched while ``body`` runs, stream micro-batches
+    included: job ids are sequential, so count those strictly between
+    a marker job before and one after."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def marker() -> list[int]:
+        tag = f"marker-{uuid.uuid4().hex}"
+        sc.setJobGroup(tag, tag)
+        try:
+            spark.range(1).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return sc.statusTracker().getJobIdsForGroup(tag)
+
+    before = max(marker())
+    body()
+    return min(marker()) - before - 1
+
+
+# Spark jobs of one drained increment over a small feed: bronze merge
+# write (3), silver merge write (3), gold write (1), search-index write
+# (2). Reads resolve their schema and tallies their row counts from the
+# snapshot manifests, and silver is committed once. Before that, the
+# same drain launched 22 jobs.
+DRAIN_JOBS = 9
+
+
+def test_streaming_drain_job_budget_and_idle_drain(spark, tmp_path):
+    from simple_etl_spark.pipeline import run_streaming_pipeline
+
+    wh = str(tmp_path / "swh")
+    src = str(tmp_path / "stream_src")
+    ckpt = str(tmp_path / "ckpt")
+
+    def publish(rows):
+        spark.createDataFrame(rows, STREAM_SCHEMA).coalesce(1).write.mode(
+            "append").parquet(src)
+
+    def drain():
+        stream = spark.readStream.schema(STREAM_SCHEMA).parquet(src)
+        return run_streaming_pipeline(spark, stream, wh, checkpoint=ckpt)
+
+    publish(_feed_rows(8, 6))
+    assert drain() == {"bronze_saved": 6, "silver_processed": 6, "gold_processed": 6}
+
+    # an increment: 3 updated articles, 2 new ones
+    publish(_feed_rows(9, 8)[3:])
+    tallies = []
+    jobs = _jobs_between(spark, lambda: tallies.append(drain()))
+    assert tallies == [{"bronze_saved": 8, "silver_processed": 8, "gold_processed": 8}]
+    assert jobs <= DRAIN_JOBS
+
+    silver = read_table(spark, f"{wh}/silver")
+    assert silver.filter("NOT processed").count() == 0
+    assert sorted(r["content"][:18] for r in silver.collect()) == (
+        ["Konten uji versi 8"] * 3 + ["Konten uji versi 9"] * 5)
+
+    # a drain with no new input commits no silver snapshot and leaves
+    # gold and the tally as they were
+    silver_v = current_version(f"{wh}/silver")
+    gold_rows = sorted(map(tuple, read_table(spark, f"{wh}/gold").collect()))
+    silver_rows = sorted(map(tuple, silver.collect()))
+    assert drain() == tallies[0]
+    assert current_version(f"{wh}/silver") == silver_v
+    assert sorted(map(tuple, read_table(spark, f"{wh}/silver").collect())) == silver_rows
+    assert sorted(map(tuple, read_table(spark, f"{wh}/gold").collect())) == gold_rows

@@ -46,6 +46,34 @@ def test_crawl_source_fanout(spark):
     assert all(r["content"].startswith("content of ") for r in rows)
 
 
+def test_crawl_listing_lands_one_partition(spark):
+    """The listing is one Arrow-built partition, so the default content
+    fan-out is one task; ``parallelism`` still fans it out."""
+    from simple_etl_spark.sources.http_source import (
+        LISTING_SCHEMA,
+        crawl_listing,
+        fetch_contents,
+    )
+
+    def _cards(page: int) -> list[dict]:
+        return [{"title": f"T{page}-{i}", "link": f"https://x/{page}/{i}",
+                 "topic": None} for i in range(5)]
+
+    listing = crawl_listing(spark, pages=3, fetcher=_cards)
+    assert listing.schema == LISTING_SCHEMA
+    assert listing.rdd.getNumPartitions() == 1
+    rows = listing.collect()
+    assert [r["link"] for r in rows] == [
+        f"https://x/{p}/{i}" for p in (1, 2, 3) for i in range(5)]
+    assert all(r["image"] is None and r["topic"] is None for r in rows)
+    assert fetch_contents(listing, lambda link: link).rdd.getNumPartitions() == 1
+    fanned = fetch_contents(listing, lambda link: link, parallelism=3)
+    assert fanned.rdd.getNumPartitions() == 3 and fanned.count() == 15
+
+    empty = crawl_listing(spark, pages=2, fetcher=lambda page: [])
+    assert empty.schema == LISTING_SCHEMA and empty.count() == 0
+
+
 def test_kafka_producer_contract_matches_reference():
     """The robust-producer contract every write_batch ships
     (services/kafka_services.py:23-33, producer_services.py:19-22):
