@@ -117,10 +117,3 @@ def lavg(units_col: Column, scale: int, alias: str) -> Column:
     double division by the group count (same two ops in the oracle)."""
     return (_exact_value(F.sum(units_col), scale) / F.count(F.lit(1))).alias(alias)
 
-
-def oracle_sum(expr: str, alias: str) -> str:
-    return f"cast(sum(cast({expr} as decimal(9,2))) as double) as {alias}"
-
-
-def oracle_avg(expr: str, alias: str) -> str:
-    return f"cast(sum(cast({expr} as decimal(9,2))) as double) / count(*) as {alias}"

@@ -1,4 +1,5 @@
-"""Article text-cleaning function library (SURVEY §2.8 F1-F5, X1).
+"""Article text-cleaning function library (SURVEY §2.8 F1-F5; their X1
+composition is :func:`simple_etl_spark.operators.medallion.silver_from_bronze`).
 
 Pure Column-expression re-implementations of the reference cleaner
 (`processor/cleaner.py:13-85`), whose SQL twin
@@ -230,18 +231,6 @@ def content_length(col: Column | str) -> Column:
     """F5: LENGTH(content) (services/pg_staging.py:216)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.length(c).cast("int")
-
-
-def clean_article(df, title="title", content="content", date_raw="date_raw", link="link"):
-    """X1: compose F1-F4 into the bronze→silver promotion
-    (processor/cleaner.py:74-85) — one projection, zero UDFs."""
-    return (
-        df.withColumn(title, clean_title(title))
-        .withColumn(content, clean_content(content))
-        .withColumn("date", parse_date(date_raw))
-        .withColumn("id", gen_id(link))
-        .withColumn("content_length", content_length(content))
-    )
 
 
 def register_sql_functions(spark) -> list[str]:

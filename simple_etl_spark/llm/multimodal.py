@@ -5,29 +5,26 @@ columns with a metadata struct; decode/feature extraction runs as
 Arrow-batched ``mapInPandas`` so payload bytes never round-trip
 through Python row-at-a-time.
 
-The stdlib decoders cover the formats the registered queries emit,
-each decoded in full, plus a legacy tier of stdlib image/audio codecs:
+The stdlib decoders cover exactly the formats the registered queries
+emit, each decoded in full:
 
 - :func:`decode_image` — PNG (8/16-bit, palette, sub-8-bit gray,
-  Adam7), fed by :func:`encode_png` in ``llm_image_features``; also
-  binary PPM/PGM (:func:`encode_ppm` is its inverse), BMP (BI_RGB,
-  BI_BITFIELDS, palette with RLE4/RLE8), GIF (first frame) and
-  baseline TIFF (none/PackBits/LZW/Deflate, predictor 2).
+  Adam7), fed by :func:`encode_png` in ``llm_image_features``.
 - :func:`decode_audio` — RIFF/WAV integer PCM (8/16/24-bit),
   IEEE-float and WAVE_FORMAT_EXTENSIBLE, fed by :func:`encode_wav`
-  in ``llm_audio_features``; FLAC (every subframe type, CRC and
+  in ``llm_audio_features``; and FLAC (every subframe type, CRC and
   STREAMINFO-MD5 checks), fed by :func:`encode_flac_verbatim` in
-  ``llm_flac_features``; also AIFF/AIFC, G.711 A-law/µ-law and
-  IMA/MS ADPCM WAV.
+  ``llm_flac_features``.
 - :func:`demux_video` + :func:`decode_video_frame` — YUV4MPEG2 planar
   frames (mono, 4:2:0/4:2:2/4:4:4, 10/12/16-bit), fed by
-  :func:`encode_y4m` in ``llm_video_features``; also animated GIF.
+  :func:`encode_y4m` in ``llm_video_features``.
 
-JPEG and AVI fail loudly at their dispatch seams with
-``NotImplementedError`` naming the format, as do the variants of the
-formats above that need a real codec. That seam is where a deployment
-plugs in PIL/libvips/libsndfile/ffmpeg. Malformed payloads raise
-``ValueError``, and every decoder caps header-declared sizes by
+Every other format fails loudly at its dispatch seam:
+``NotImplementedError`` naming the format (JPEG, GIF, TIFF, BMP and
+PPM/PGM images; AIFF/AIFC and compressed WAV such as ADPCM or G.711
+audio; AVI and animated GIF video). That seam is where a
+deployment plugs in PIL/libvips/libsndfile/ffmpeg. Malformed payloads
+raise ``ValueError``, and every decoder caps header-declared sizes by
 :data:`MAX_DECODE_PIXELS`. The ``*_features`` shells turn either error
 into NULL features, so an undecodable blob is data, not a task
 failure.
@@ -66,306 +63,37 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _ppm_tokens(payload: bytes, n: int) -> tuple[list[int], int]:
-    """First ``n`` whitespace-separated integer tokens after the PNM
-    magic, honoring ``#`` comments; returns (values, offset past the
-    single whitespace byte that terminates the last token)."""
-    vals: list[int] = []
-    i = 2  # past magic
-    while len(vals) < n:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if i < len(payload) and payload[i : i + 1] == b"#":
-            while i < len(payload) and payload[i] != 0x0A:
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        if j == i:
-            raise ValueError("truncated PNM header")
-        vals.append(int(payload[i:j]))
-        i = j
-    return vals, i + 1  # exactly ONE whitespace byte ends the header
+# Magic prefixes of the image formats no registered query emits: each
+# fails loudly here, naming the format, rather than as "unrecognized".
+_CODEC_ONLY_IMAGES = (
+    (b"\xff\xd8\xff", "JPEG"),
+    (b"GIF87a", "GIF"),
+    (b"GIF89a", "GIF"),
+    (b"II*\x00", "TIFF"),
+    (b"MM\x00*", "TIFF"),
+    (b"BM", "BMP"),
+    (b"P5", "PGM"),
+    (b"P6", "PPM"),
+)
 
 
 def decode_image(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Decode an image with zero dependencies: binary PPM (``P6``, 3
-    channels), binary PGM (``P5``, 1 channel), BMP (BI_RGB 24/32-bit,
-    BI_BITFIELDS 16/32-bit, 1/4/8-bit palette with RLE4/RLE8; bottom-up
-    or top-down), PNG (:func:`_decode_png`: 8/16-bit, palette,
-    sub-8-bit gray, Adam7), the first frame of a GIF
-    (:func:`_decode_gif_frames`) and baseline TIFF
-    (:func:`_decode_tiff`). Returns ``(width, height, channels,
-    pixels)`` with ``pixels`` row-major top-down, channels
-    interleaved.
+    """Decode a PNG with zero dependencies (:func:`_decode_png`: gray,
+    gray+alpha, RGB, RGBA at 8/16 bits, 1/2/4/8-bit palette and
+    grayscale, Adam7). Returns ``(width, height, channels, pixels)``
+    with ``pixels`` row-major top-down, channels interleaved.
 
-    JPEG, and the variants of the formats above that genuinely need a
-    codec library, raise ``NotImplementedError`` naming the format:
-    this dispatch is where a deployment plugs PIL/libvips in.
+    PNG is the one image format a registered query emits
+    (:func:`encode_png` feeds ``llm_image_features``). JPEG, GIF,
+    TIFF, BMP and PPM/PGM raise ``NotImplementedError`` naming the
+    format: this dispatch is where a deployment plugs in PIL/libvips.
     Malformed payloads raise ``ValueError``."""
-    if payload[:2] in (b"P6", b"P5"):
-        channels = 3 if payload[:2] == b"P6" else 1
-        (w, h, maxval), off = _ppm_tokens(payload, 3)
-        if w < 1 or h < 1:
-            raise ValueError(f"bad PNM dimensions {w}x{h}")
-        if not 0 < maxval < 256:
-            raise ValueError(f"only 8-bit PNM supported, maxval={maxval}")
-        need = w * h * channels
-        pixels = payload[off : off + need]
-        if len(pixels) != need:
-            raise ValueError(f"PNM pixel data truncated: {len(pixels)}/{need}")
-        return w, h, channels, pixels
-    if payload[:2] == b"BM":
-        import struct
-
-        if len(payload) < 54:
-            raise ValueError("BMP header truncated")
-        data_off = struct.unpack_from("<I", payload, 10)[0]
-        dib_size = struct.unpack_from("<I", payload, 14)[0]
-        # The field offsets below are BITMAPINFOHEADER layout; a
-        # BITMAPCOREHEADER (12-byte DIB) file would read bpp/compression
-        # from the wrong bytes and return garbage, so reject it loudly.
-        if dib_size < 40:
-            raise NotImplementedError(
-                f"BMP DIB header size {dib_size} (BITMAPCOREHEADER?) "
-                "unsupported; need BITMAPINFOHEADER (>= 40)"
-            )
-        if data_off < 14 + dib_size or data_off > len(payload):
-            raise ValueError(
-                f"BMP pixel offset {data_off} inside header/out of range "
-                f"(DIB size {dib_size}, payload {len(payload)})"
-            )
-        w, raw_h = struct.unpack_from("<ii", payload, 18)
-        bpp = struct.unpack_from("<H", payload, 28)[0]
-        compression = struct.unpack_from("<I", payload, 30)[0]
-        if compression not in (0, 1, 2, 3):
-            # 4/5 = embedded JPEG/PNG — those genuinely need a codec
-            raise NotImplementedError(
-                f"compressed BMP (compression={compression}) requires a codec"
-            )
-        if w < 1 or raw_h == 0:
-            raise ValueError(f"bad BMP dimensions {w}x{raw_h}")
-        h, top_down = abs(raw_h), raw_h < 0
-        if w * h > MAX_DECODE_PIXELS:
-            raise ValueError(
-                f"BMP declares {w}x{h} = {w * h} pixels "
-                "> MAX_DECODE_PIXELS"
-            )
-        if compression == 3:
-            # BI_BITFIELDS: 16/32-bit pixels with mask-defined channel
-            # layouts (565/555/8888 in the wild). Masks live right
-            # after a 40-byte BITMAPINFOHEADER, or at fixed offsets in
-            # the V2+ headers (>= 52 bytes). Channels scale to 8-bit
-            # by the same exact rounding rule as 16-bit PNG.
-            if bpp not in (16, 32):
-                raise ValueError(
-                    f"BI_BITFIELDS BMP must be 16/32-bit, got {bpp}"
-                )
-            # masks sit at absolute offset 54 either way: a 40-byte
-            # header is followed by a 12-byte mask block, V2+ headers
-            # carry them as fields at DIB offset 40; the alpha mask is
-            # a V3+ field at DIB offset 52
-            if len(payload) < 66:
-                raise ValueError("BMP bitfield masks truncated")
-            masks = list(struct.unpack_from("<III", payload, 54))
-            amask = (
-                struct.unpack_from("<I", payload, 66)[0]
-                if dib_size >= 56 and len(payload) >= 70 else 0
-            )
-            shifts, maxvs = [], []
-            for m in masks + [amask]:
-                if m == 0:
-                    shifts.append(0)
-                    maxvs.append(0)
-                    continue
-                tz = (m & -m).bit_length() - 1
-                top = m >> tz
-                if top & (top + 1):
-                    raise ValueError(
-                        f"BMP bitfield mask 0x{m:08x} is not contiguous"
-                    )
-                if m > (1 << bpp) - 1:
-                    raise ValueError(
-                        f"BMP bitfield mask 0x{m:08x} exceeds {bpp} bpp"
-                    )
-                shifts.append(tz)
-                maxvs.append(top)
-            if 0 in maxvs[:3]:
-                raise ValueError("BMP bitfield R/G/B masks must be nonzero")
-            nch = 4 if amask else 3
-            pxw = bpp // 8
-            stride = (w * pxw + 3) & ~3
-            if len(payload) < data_off + stride * h:
-                raise ValueError("BMP pixel data truncated")
-            rows = range(h) if top_down else range(h - 1, -1, -1)
-            out = bytearray(w * h * nch)
-            o = 0
-            unpack = struct.unpack_from
-            fmt = "<H" if bpp == 16 else "<I"
-            layout = [
-                ((masks + [amask])[c], shifts[c], maxvs[c])
-                for c in range(nch)
-            ]
-            for r in rows:
-                base = data_off + r * stride
-                for x in range(w):
-                    (px,) = unpack(fmt, payload, base + x * pxw)
-                    for c, (m, sh, mv) in enumerate(layout):
-                        v = (px & m) >> sh
-                        out[o + c] = (v * 255 + (mv >> 1)) // mv
-                    o += nch
-            return w, h, nch, bytes(out)
-        if bpp in (1, 4, 8):
-            # palette BMP (the legacy-corpus format): BGRA color table
-            # after the DIB header, biClrUsed entries (0 = 2^bpp)
-            used = struct.unpack_from("<I", payload, 46)[0] or (1 << bpp)
-            if used > 1 << bpp:
-                raise ValueError(
-                    f"BMP declares {used} palette entries at {bpp} bpp"
-                )
-            pal_at = 14 + dib_size
-            pal = payload[pal_at : pal_at + 4 * used]
-            if len(pal) != 4 * used:
-                raise ValueError("BMP color table truncated")
-            idx = _bmp_indices(
-                payload, data_off, w, h, bpp, compression, top_down
-            )
-            out = bytearray(w * h * 3)
-            for i, v in enumerate(idx):
-                if v >= used:
-                    raise ValueError(
-                        f"BMP pixel index {v} outside the "
-                        f"{used}-entry color table"
-                    )
-                p = v * 4
-                o = i * 3
-                out[o] = pal[p + 2]
-                out[o + 1] = pal[p + 1]
-                out[o + 2] = pal[p]
-            return w, h, 3, bytes(out)
-        if compression != 0:
-            raise ValueError(
-                f"BMP RLE compression {compression} requires "
-                f"4/8-bit palette data, got {bpp} bpp"
-            )
-        if bpp not in (24, 32):
-            raise NotImplementedError(
-                f"{bpp}-bit BMP (16-bit needs BI_BITFIELDS masks)"
-            )
-        nch = bpp // 8
-        stride = (w * nch + 3) & ~3  # rows pad to 4 bytes
-        if len(payload) < data_off + stride * h:
-            raise ValueError("BMP pixel data truncated")
-        rows = range(h) if top_down else range(h - 1, -1, -1)
-        out = bytearray(w * h * nch)
-        pos = 0
-        for r in rows:
-            row = payload[data_off + r * stride : data_off + r * stride + w * nch]
-            for c in range(0, w * nch, nch):
-                # BGR(A) on disk → RGB(A) out
-                out[pos], out[pos + 1], out[pos + 2] = (
-                    row[c + 2], row[c + 1], row[c],
-                )
-                if nch == 4:
-                    out[pos + 3] = row[c + 3]
-                pos += nch
-        return w, h, nch, bytes(out)
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         return _decode_png(payload)
-    if payload[:3] == b"\xff\xd8\xff":
-        raise NotImplementedError("JPEG images require a codec library")
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        w, h, frames, _delays = _decode_gif_frames(payload,
-                                                   first_only=True)
-        return w, h, 3, frames[0]
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        return _decode_tiff(payload)
+    for magic, fmt in _CODEC_ONLY_IMAGES:
+        if payload[: len(magic)] == magic:
+            raise NotImplementedError(f"{fmt} images require a codec library")
     raise ValueError(f"unrecognized image magic {payload[:4]!r}")
-
-
-def _bmp_indices(payload, data_off, w, h, bpp, compression, top_down):
-    """Decode a palette BMP's pixel data to one index byte per pixel,
-    row-major top-down. Uncompressed rows are MSB-first packed and
-    4-byte padded; BI_RLE8 (compression 1, 8 bpp) and BI_RLE4
-    (compression 2, 4 bpp) decode encoded runs, absolute runs
-    (2-byte aligned), end-of-line/bitmap escapes, and position deltas
-    per the Windows BMP spec — pixels never written stay index 0, the
-    documented RLE behavior. RLE bitmaps are always bottom-up."""
-    idx = bytearray(w * h)
-    if compression == 0:
-        per = 8 // bpp
-        mask = (1 << bpp) - 1
-        stride = ((w * bpp + 31) // 32) * 4
-        if len(payload) < data_off + stride * h:
-            raise ValueError("BMP pixel data truncated")
-        rows = range(h) if top_down else range(h - 1, -1, -1)
-        o = 0
-        for r in rows:
-            row = payload[data_off + r * stride :
-                          data_off + r * stride + stride]
-            for x in range(w):
-                shift = 8 - bpp * ((x % per) + 1)
-                idx[o] = (row[x // per] >> shift) & mask
-                o += 1
-        return idx
-    if (compression, bpp) not in ((1, 8), (2, 4)):
-        raise ValueError(
-            f"BMP RLE{8 if compression == 1 else 4} requires "
-            f"{8 if compression == 1 else 4} bpp, got {bpp}"
-        )
-    if top_down:
-        raise ValueError("RLE BMP cannot be top-down")
-    x, y = 0, 0  # y counts from the BOTTOM row
-    pos = data_off
-
-    def put(v):
-        nonlocal x
-        if x < w and y < h:
-            idx[(h - 1 - y) * w + x] = v
-        x += 1
-
-    while True:
-        if pos + 2 > len(payload):
-            raise ValueError("BMP RLE data truncated")
-        n, v = payload[pos], payload[pos + 1]
-        pos += 2
-        if n:  # encoded run
-            if compression == 1:
-                for _ in range(n):
-                    put(v)
-            else:
-                for k in range(n):
-                    put((v >> 4) if k % 2 == 0 else (v & 0x0F))
-        elif v == 0:  # end of line
-            x, y = 0, y + 1
-        elif v == 1:  # end of bitmap
-            return idx
-        elif v == 2:  # delta
-            if pos + 2 > len(payload):
-                raise ValueError("BMP RLE delta truncated")
-            x += payload[pos]
-            y += payload[pos + 1]
-            pos += 2
-        else:  # absolute run of v pixels, padded to 2-byte alignment
-            if compression == 1:
-                need = v
-                run = payload[pos : pos + need]
-                if len(run) != need:
-                    raise ValueError("BMP RLE absolute run truncated")
-                for b in run:
-                    put(b)
-            else:
-                need = (v + 1) // 2
-                run = payload[pos : pos + need]
-                if len(run) != need:
-                    raise ValueError("BMP RLE absolute run truncated")
-                for k in range(v):
-                    b = run[k // 2]
-                    put((b >> 4) if k % 2 == 0 else (b & 0x0F))
-            pos += need + (need & 1)
-        if y > h:
-            raise ValueError("BMP RLE runs past the bitmap height")
 
 
 def _png_paeth(a: int, b: int, c: int) -> int:
@@ -607,116 +335,6 @@ MAX_DECODE_PIXELS = 64_000_000
 def byte_features(payload: bytes) -> tuple[int, int]:
     """Deterministic fake 'decoder': (byte length, first byte)."""
     return len(payload), (payload[0] if payload else -1)
-
-
-# -- AIFF/AIFC (big-endian PCM — Apple-ecosystem corpora) -------------
-
-
-def _aiff_ext80(b: bytes) -> int:
-    """IEEE 754 80-bit extended float → nearest int (AIFF sample
-    rates are small integers): sign/15-bit exponent (bias 16383),
-    64-bit mantissa with an explicit integer bit."""
-    if len(b) != 10:
-        raise ValueError("AIFF sample rate field must be 10 bytes")
-    se = int.from_bytes(b[:2], "big")
-    mant = int.from_bytes(b[2:], "big")
-    if mant == 0:
-        return 0
-    exp = (se & 0x7FFF) - 16383 - 63
-    v = mant * (2 ** exp) if exp >= 0 else mant / (2 ** -exp)
-    if se & 0x8000:
-        v = -v
-    return int(round(v))
-
-
-def _decode_aiff(payload: bytes) -> "tuple[int, int, int, array]":
-    """AIFF / AIFC-NONE / AIFC-sowt decode: FORM chunk walk, COMM
-    (channels, frames, bits, 80-bit-extended sample rate, and for
-    AIFC the compression fourcc), SSND big-endian signed PCM
-    ('sowt' = byte-swapped little-endian 16-bit). AIFF 8-bit is
-    SIGNED (unlike WAV). Same return contract as the WAV paths."""
-    import struct
-    from array import array
-
-    pos = 12
-    comm = None
-    ssnd = None
-    little = False
-    g711 = None
-    is_aifc = payload[8:12] == b"AIFC"
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack_from(">I", payload, pos + 4)
-        body = payload[pos + 8 : pos + 8 + clen]
-        if len(body) != clen:
-            raise ValueError(f"AIFF chunk {cid!r} truncated")
-        if cid == b"COMM":
-            if comm is not None:
-                raise ValueError("AIFF has more than one COMM chunk")
-            if clen < (22 if is_aifc else 18):
-                raise ValueError("AIFF COMM chunk too short")
-            channels, frames = struct.unpack_from(">hI", body, 0)
-            (bits,) = struct.unpack_from(">h", body, 6)
-            rate = _aiff_ext80(body[8:18])
-            if is_aifc:
-                ctype = body[18:22]
-                if ctype == b"sowt":
-                    little = True
-                elif ctype in (b"ulaw", b"ULAW"):
-                    g711 = "ulaw"
-                elif ctype in (b"alaw", b"ALAW"):
-                    g711 = "alaw"
-                elif ctype not in (b"NONE",):
-                    raise NotImplementedError(
-                        f"AIFC compression {ctype!r} requires a codec"
-                    )
-            comm = (channels, frames, bits, rate)
-        elif cid == b"SSND":
-            if ssnd is not None:
-                raise ValueError("AIFF has more than one SSND chunk")
-            if clen < 8:
-                raise ValueError("AIFF SSND chunk too short")
-            off, _blk = struct.unpack_from(">II", body, 0)
-            ssnd = body[8 + off :]
-        pos += 8 + clen + (clen & 1)
-    if comm is None or ssnd is None:
-        raise ValueError("AIFF missing COMM/SSND chunk")
-    channels, frames, bits, rate = comm
-    if channels < 1 or rate < 1:
-        raise ValueError(f"bad AIFF layout: {channels}ch @ {rate}Hz")
-    if g711 is not None:
-        # G.711 codes are one byte per sample; COMM declares the
-        # DECODED size (16). Expansion reuses the WAV tier's ITU-T
-        # tables, returning the same int16-domain contract as WAV
-        # formats 6/7.
-        n = frames * channels
-        if n > MAX_DECODE_PIXELS:
-            raise ValueError(
-                "AIFF declares more than MAX_DECODE_PIXELS samples"
-            )
-        if len(ssnd) < n:
-            raise ValueError("AIFF SSND data shorter than COMM declares")
-        table = _G711_ULAW if g711 == "ulaw" else _G711_ALAW
-        samples = array("h", map(table.__getitem__, ssnd[:n]))
-        return rate, channels, 16, samples
-    if bits not in (8, 16, 24, 32):
-        raise NotImplementedError(f"{bits}-bit AIFF")
-    if little and bits != 16:
-        raise NotImplementedError("AIFC 'sowt' must be 16-bit")
-    width = bits // 8
-    n = frames * channels
-    if n > MAX_DECODE_PIXELS:
-        raise ValueError("AIFF declares more than MAX_DECODE_PIXELS samples")
-    if len(ssnd) < n * width:
-        raise ValueError("AIFF SSND data shorter than COMM declares")
-    tc = {1: "b", 2: "h", 3: "i", 4: "i"}[width]
-    samples = array(tc)
-    endb = "little" if little else "big"
-    for i in range(n):
-        samples.append(int.from_bytes(
-            ssnd[i * width : (i + 1) * width], endb, signed=True
-        ))
-    return rate, channels, bits, samples
 
 
 # -- FLAC (lossless audio — the LibriSpeech-class corpus format) -----
@@ -1161,25 +779,21 @@ def decode_audio(payload: bytes) -> "tuple[int, int, int, array]":
     into the signed-16-bit domain (round-half-even × 32767, clamped;
     every op correctly-rounded IEEE, so the integers are
     host-deterministic) to keep downstream features integer-exact.
-    G.711 A-law/µ-law (formats 6/7) expand by the ITU-T tables,
-    IMA/DVI ADPCM (format 17) decodes by the published step/index
-    tables (4-bit nibbles, block headers, ``fact``-trimmed tail),
-    MS ADPCM (format 2) by the published coefficient/adaptation
-    tables, and WAVE_FORMAT_EXTENSIBLE containers unwrap their
-    SubFormat code.
+    WAVE_FORMAT_EXTENSIBLE containers unwrap their SubFormat code.
+    ``fLaC`` payloads dispatch to :func:`_decode_flac`.
 
     ``bits`` in the return is the CONTAINER's declared depth, not the
-    sample domain: float (32/64) and G.711 (8) payloads come back as
-    int16-domain samples. :func:`encode_wav` is the exact inverse for
-    the integer PCM depths (8/16/24) only.
+    sample domain: float (32/64) payloads come back as int16-domain
+    samples. :func:`encode_wav` is the exact inverse for the integer
+    PCM depths (8/16/24) only.
 
     Chunk-walks the RIFF container (extra chunks like LIST/fact are
     skipped), requires one ``fmt `` and one ``data`` chunk, and caps
     total samples at :data:`MAX_DECODE_PIXELS` — the same
     header-declared-allocation ceiling the image decoders enforce.
-    Compressed formats raise ``NotImplementedError``; malformed
-    payloads (including non-finite float samples) raise
-    ``ValueError``."""
+    Compressed WAV formats (ADPCM, G.711, MPEG, ...) and AIFF/AIFC
+    raise ``NotImplementedError`` naming the format; malformed payloads
+    (including non-finite float samples) raise ``ValueError``."""
     import struct
     import sys
     from array import array
@@ -1187,10 +801,10 @@ def decode_audio(payload: bytes) -> "tuple[int, int, int, array]":
     if payload[:4] == b"fLaC":
         return _decode_flac(payload)
     if payload[:4] == b"FORM" and payload[8:12] in (b"AIFF", b"AIFC"):
-        return _decode_aiff(payload)
+        raise NotImplementedError("AIFF/AIFC audio requires a codec library")
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError(f"not a RIFF/WAVE payload: {payload[:4]!r}")
-    pos, fmt, data, fact = 12, None, None, None
+    pos, fmt, data = 12, None, None
     while pos + 8 <= len(payload):
         cid = payload[pos : pos + 4]
         (clen,) = struct.unpack_from("<I", payload, pos + 4)
@@ -1205,8 +819,6 @@ def decode_audio(payload: bytes) -> "tuple[int, int, int, array]":
             if data is not None:
                 raise ValueError("WAV has more than one data chunk")
             data = body
-        elif cid == b"fact":
-            fact = body
         pos += 8 + clen + (clen & 1)  # chunks pad to even offsets
     if fmt is None or data is None:
         raise ValueError("WAV missing fmt/data chunk")
@@ -1230,22 +842,12 @@ def decode_audio(payload: bytes) -> "tuple[int, int, int, array]":
             raise NotImplementedError(
                 "extensible WAV with a non-standard SubFormat GUID"
             )
-    if audio_fmt not in (1, 2, 3, 6, 7, 0x11):
+    if audio_fmt not in (1, 3):
         raise NotImplementedError(
             f"compressed WAV (format {audio_fmt}) requires a codec"
         )
     if channels < 1 or rate < 1:
         raise ValueError(f"bad WAV layout: {channels}ch @ {rate}Hz")
-    if audio_fmt == 2:
-        # MS ADPCM (format 2): predictor-coefficient blocks with
-        # adaptive delta — integer-exact, stdlib-only (r13)
-        return _decode_ms_adpcm(fmt, data, channels, rate, bits, fact)
-    if audio_fmt == 0x11:
-        # IMA/DVI ADPCM (format 17): 4-bit differential nibbles over
-        # the published step/index tables — integer-exact, stdlib-only
-        # (VERDICT r10 #3). Handled before the width math below, which
-        # assumes whole-byte samples.
-        return _decode_ima_adpcm(fmt, data, channels, rate, bits, fact)
     if audio_fmt == 3:
         # IEEE-float PCM is pure-stdlib too (struct '<f'/'<d'); the
         # nominal [-1.0, 1.0] samples quantize into the signed-16-bit
@@ -1255,12 +857,6 @@ def decode_audio(payload: bytes) -> "tuple[int, int, int, array]":
         # rounded IEEE ops — deterministic across hosts.
         if bits not in (32, 64):
             raise ValueError(f"bad IEEE-float WAV bit depth {bits}")
-    elif audio_fmt in (6, 7):
-        # G.711 A-law / µ-law (telephony corpora): 8-bit log-companded
-        # samples expand to exact int16 by the ITU-T tables — integer
-        # arithmetic only, bit-exact by construction.
-        if bits != 8:
-            raise ValueError(f"G.711 WAV must be 8-bit, got {bits}")
     elif bits not in (8, 16, 24):
         raise NotImplementedError(f"{bits}-bit PCM WAV")
     width = bits // 8
@@ -1292,9 +888,6 @@ def decode_audio(payload: bytes) -> "tuple[int, int, int, array]":
             samples.append(
                 -32768 if q < -32768 else (32767 if q > 32767 else q)
             )
-    elif audio_fmt in (6, 7):
-        table = _G711_ALAW if audio_fmt == 6 else _G711_ULAW
-        samples = array("h", map(table.__getitem__, data))
     elif bits == 8:
         # u8 - 128 == int8(u8 ^ 0x80): one translate pass, 1 byte/sample
         samples = array("b", bytes.translate(data, _U8_RECENTER))
@@ -1325,326 +918,6 @@ _U8_RECENTER = bytes((b ^ 0x80) for b in range(256))
 _WAV_GUID_TAIL = bytes(
     [0x00, 0x00, 0x10, 0x00, 0x80, 0x00, 0x00, 0xAA, 0x00, 0x38, 0x9B, 0x71]
 )
-
-
-# IMA/DVI ADPCM quantizer tables (public: IMA "Recommended Practices
-# for Enhancing Digital Audio Compatibility", rev 3.00, and the
-# Microsoft WAVE format registry for wFormatTag 0x0011). 89 step
-# sizes; the index delta is symmetric in the nibble's sign bit.
-_IMA_INDEX = [-1, -1, -1, -1, 2, 4, 6, 8]
-_IMA_STEP = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
-    34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130,
-    143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449,
-    494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411,
-    1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026,
-    4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442,
-    11487, 12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623,
-    27086, 29794, 32767,
-]
-
-
-def _ima_step_decode(nib: int, pred: int, idx: int) -> tuple[int, int]:
-    """One IMA ADPCM nibble: reconstruct the next predictor and step
-    index. diff = (delta*2 + 1) * step / 8 computed via the spec's
-    shift ladder (bit-exact with CPython's audioop.adpcm2lin inner
-    loop, which tests cross-verify)."""
-    step = _IMA_STEP[idx]
-    diff = step >> 3
-    if nib & 1:
-        diff += step >> 2
-    if nib & 2:
-        diff += step >> 1
-    if nib & 4:
-        diff += step
-    if nib & 8:
-        diff = -diff
-    pred += diff
-    pred = -32768 if pred < -32768 else (32767 if pred > 32767 else pred)
-    idx += _IMA_INDEX[nib & 0x7]
-    idx = 0 if idx < 0 else (88 if idx > 88 else idx)
-    return pred, idx
-
-
-def _decode_ima_adpcm(
-    fmt: bytes, data: bytes, channels: int, rate: int, bits: int, fact
-) -> "tuple[int, int, int, array]":
-    """WAV IMA ADPCM (wFormatTag 0x0011) block decode. Each
-    ``nBlockAlign`` block carries a 4-byte header per channel (int16
-    initial predictor — emitted as the block's first sample — a step
-    index, and a reserved byte) followed by 4-byte nibble words in
-    channel-interleaved groups: 4 bytes = 8 samples of ONE channel,
-    low nibble first. A ``fact`` chunk (mandatory for compressed WAV)
-    trims the final partial block to the declared frame count.
-    Returns int16-domain samples like the other compressed paths;
-    ``bits`` stays the container's declared 4."""
-    import struct
-    from array import array
-
-    if bits != 4:
-        raise ValueError(f"IMA ADPCM WAV must be 4-bit, got {bits}")
-    (block_align,) = struct.unpack_from("<H", fmt, 12)
-    hdr = 4 * channels
-    if block_align <= hdr or (block_align - hdr) % (4 * channels):
-        raise ValueError(
-            f"bad IMA ADPCM block layout: align {block_align}, "
-            f"{channels} channel(s)"
-        )
-    spb = (block_align - hdr) * 2 // channels + 1  # samples/ch/block
-    if len(fmt) >= 20:
-        (cb,) = struct.unpack_from("<H", fmt, 16)
-        if cb >= 2:
-            (declared,) = struct.unpack_from("<H", fmt, 18)
-            if declared != spb:
-                raise ValueError(
-                    f"IMA ADPCM declares {declared} samples/block but "
-                    f"the block layout implies {spb}"
-                )
-    if not data or len(data) % block_align:
-        raise ValueError("IMA ADPCM data is not a whole number of blocks")
-    nblocks = len(data) // block_align
-    if nblocks * spb * channels > MAX_DECODE_PIXELS:
-        raise ValueError(
-            f"IMA ADPCM declares {nblocks * spb * channels} samples "
-            "> MAX_DECODE_PIXELS"
-        )
-    samples = array("h")
-    groups = (block_align - hdr) // (4 * channels)
-    for b in range(nblocks):
-        base = b * block_align
-        bufs: list[list[int]] = []
-        preds: list[int] = []
-        idxs: list[int] = []
-        for c in range(channels):
-            pred, idx = struct.unpack_from("<hB", data, base + 4 * c)
-            if idx > 88:
-                raise ValueError(f"IMA ADPCM step index {idx} > 88")
-            bufs.append([pred])  # the header predictor IS sample 0
-            preds.append(pred)
-            idxs.append(idx)
-        pos = base + hdr
-        for _ in range(groups):
-            for c in range(channels):
-                pred, idx, buf = preds[c], idxs[c], bufs[c]
-                for byte in data[pos : pos + 4]:
-                    for nib in (byte & 0x0F, byte >> 4):
-                        pred, idx = _ima_step_decode(nib, pred, idx)
-                        buf.append(pred)
-                preds[c], idxs[c] = pred, idx
-                pos += 4
-        for i in range(spb):
-            for c in range(channels):
-                samples.append(bufs[c][i])
-    if fact is not None:
-        if len(fact) < 4:
-            raise ValueError("WAV fact chunk too short")
-        (frames,) = struct.unpack_from("<I", fact, 0)
-        # the declared count must land inside the last block
-        if not (nblocks - 1) * spb < frames <= nblocks * spb:
-            raise ValueError(
-                f"WAV fact frame count {frames} inconsistent with "
-                f"{nblocks} block(s) of {spb} samples"
-            )
-        del samples[frames * channels :]
-    return rate, channels, bits, samples
-
-
-# MS ADPCM (wFormatTag 0x0002) constants from the public Microsoft
-# ADPCM spec (the seven standard predictor coefficient pairs in
-# 1/256ths, and the 16-entry delta adaptation table).
-_MS_ADPCM_COEFS = [(256, 0), (512, -256), (0, 0), (192, 64),
-                   (240, 0), (460, -208), (392, -232)]
-_MS_ADAPT = [230, 230, 230, 230, 307, 409, 512, 614,
-             768, 614, 512, 409, 307, 230, 230, 230]
-
-
-def _trunc_div(n: int, d: int) -> int:
-    """C-style integer division (truncate toward zero) — the MS ADPCM
-    reference code divides signed predictors with C ``/``, which
-    differs from Python ``//`` for negatives."""
-    q = abs(n) // d
-    return q if (n >= 0) == (d >= 0) else -q
-
-
-def _decode_ms_adpcm(
-    fmt: bytes, data: bytes, channels: int, rate: int, bits: int, fact
-) -> "tuple[int, int, int, array]":
-    """WAV MS ADPCM (wFormatTag 0x0002) block decode. Each
-    ``nBlockAlign`` block opens with a 7-byte-per-channel header
-    (predictor index into the coefficient table, int16 initial delta,
-    int16 sample1, int16 sample2 — sample2 is emitted FIRST), then
-    4-bit nibbles high-nibble-first, channel-interleaved per nibble.
-    Per nibble: ``pred = trunc((s1*c1 + s2*c2)/256) + signed4*delta``
-    clamped to int16, then ``delta = max(16, trunc(adapt[nib]*delta
-    /256))``. The fmt chunk's extension may carry a custom
-    coefficient table (wNumCoef >= 7, standard pairs first) — honored
-    when present. A ``fact`` chunk trims the final partial block.
-    Returns int16-domain samples; ``bits`` stays the declared 4."""
-    import struct
-    from array import array
-
-    if bits != 4:
-        raise ValueError(f"MS ADPCM WAV must be 4-bit, got {bits}")
-    (block_align,) = struct.unpack_from("<H", fmt, 12)
-    hdr = 7 * channels
-    if block_align <= hdr or (2 * (block_align - hdr)) % channels:
-        raise ValueError(
-            f"bad MS ADPCM block layout: align {block_align}, "
-            f"{channels} channel(s)"
-        )
-    spb = 2 + 2 * (block_align - hdr) // channels
-    coefs = list(_MS_ADPCM_COEFS)
-    if len(fmt) >= 20:
-        (cb,) = struct.unpack_from("<H", fmt, 16)
-        if cb >= 4:
-            (declared,) = struct.unpack_from("<H", fmt, 18)
-            if declared != spb:
-                raise ValueError(
-                    f"MS ADPCM declares {declared} samples/block but "
-                    f"the block layout implies {spb}"
-                )
-            # every read below must be bounded by the ACTUAL chunk
-            # length, not the declared cbSize — a truncated fmt chunk
-            # must raise ValueError, not leak struct.error through
-            # the feature wrapper's catch list (review r14)
-            if len(fmt) < 22:
-                raise ValueError(
-                    f"MS ADPCM fmt chunk truncated: cbSize {cb} but "
-                    f"only {len(fmt)} bytes present"
-                )
-            (ncoef,) = struct.unpack_from("<H", fmt, 20)
-            if ncoef < 7:
-                raise ValueError(
-                    f"MS ADPCM coefficient table has {ncoef} < 7 pairs"
-                )
-            if cb >= 4 + 4 * ncoef:
-                if len(fmt) < 22 + 4 * ncoef:
-                    raise ValueError(
-                        f"MS ADPCM coefficient table truncated: "
-                        f"{ncoef} pairs declared, chunk is "
-                        f"{len(fmt)} bytes"
-                    )
-                coefs = [
-                    struct.unpack_from("<hh", fmt, 22 + 4 * i)
-                    for i in range(ncoef)
-                ]
-                if coefs[:7] != _MS_ADPCM_COEFS:
-                    raise ValueError(
-                        "MS ADPCM coefficient table does not start "
-                        "with the seven standard pairs"
-                    )
-    if not data or len(data) % block_align:
-        raise ValueError("MS ADPCM data is not a whole number of blocks")
-    nblocks = len(data) // block_align
-    if nblocks * spb * channels > MAX_DECODE_PIXELS:
-        raise ValueError(
-            f"MS ADPCM declares {nblocks * spb * channels} samples "
-            "> MAX_DECODE_PIXELS"
-        )
-    adapt = _MS_ADAPT
-    samples = array("h")
-    for b in range(nblocks):
-        base = b * block_align
-        cc1: list[int] = []
-        cc2: list[int] = []
-        deltas: list[int] = []
-        s1s: list[int] = []
-        s2s: list[int] = []
-        bufs: list[list[int]] = []
-        for c in range(channels):
-            pi = data[base + c]
-            if pi >= len(coefs):
-                raise ValueError(
-                    f"MS ADPCM predictor index {pi} outside the "
-                    f"{len(coefs)}-pair coefficient table"
-                )
-            c1, c2 = coefs[pi]
-            cc1.append(c1)
-            cc2.append(c2)
-        off = base + channels
-        deltas = [
-            struct.unpack_from("<h", data, off + 2 * c)[0]
-            for c in range(channels)
-        ]
-        off += 2 * channels
-        s1s = [
-            struct.unpack_from("<h", data, off + 2 * c)[0]
-            for c in range(channels)
-        ]
-        off += 2 * channels
-        s2s = [
-            struct.unpack_from("<h", data, off + 2 * c)[0]
-            for c in range(channels)
-        ]
-        bufs = [[s2s[c], s1s[c]] for c in range(channels)]
-        k = 0
-        for byte in data[base + hdr : base + block_align]:
-            for nib in (byte >> 4, byte & 0x0F):
-                c = k % channels
-                k += 1
-                signed = nib - 16 if nib >= 8 else nib
-                pred = _trunc_div(
-                    s1s[c] * cc1[c] + s2s[c] * cc2[c], 256
-                ) + signed * deltas[c]
-                if pred < -32768:
-                    pred = -32768
-                elif pred > 32767:
-                    pred = 32767
-                s2s[c] = s1s[c]
-                s1s[c] = pred
-                d = _trunc_div(adapt[nib] * deltas[c], 256)
-                deltas[c] = 16 if d < 16 else d
-                bufs[c].append(pred)
-        for i in range(spb):
-            for c in range(channels):
-                samples.append(bufs[c][i])
-    if fact is not None:
-        if len(fact) < 4:
-            raise ValueError("WAV fact chunk too short")
-        (frames,) = struct.unpack_from("<I", fact, 0)
-        if not (nblocks - 1) * spb < frames <= nblocks * spb:
-            raise ValueError(
-                f"WAV fact frame count {frames} inconsistent with "
-                f"{nblocks} block(s) of {spb} samples"
-            )
-        del samples[frames * channels :]
-    return rate, channels, bits, samples
-
-
-def _g711_mulaw_table() -> list[int]:
-    """ITU-T G.711 µ-law byte → linear int16 (the CCITT reference
-    expansion: invert, rebuild the mantissa with the 0x84 bias, shift
-    by the segment, re-bias) — integer-exact by construction."""
-    out = []
-    for b in range(256):
-        u = ~b & 0xFF
-        t = (((u & 0x0F) << 3) + 0x84) << ((u & 0x70) >> 4)
-        out.append(0x84 - t if u & 0x80 else t - 0x84)
-    return out
-
-
-def _g711_alaw_table() -> list[int]:
-    """ITU-T G.711 A-law byte → linear int16 (toggle the even bits
-    with 0x55, then per-segment linearization)."""
-    out = []
-    for b in range(256):
-        a = b ^ 0x55
-        t = (a & 0x0F) << 4
-        seg = (a & 0x70) >> 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        out.append(t if a & 0x80 else -t)
-    return out
-
-
-# precomputed like _U8_RECENTER: rebuilding 256-entry tables per
-# decode call inside the Arrow feature pass is pure waste (review r10)
-_G711_ULAW = _g711_mulaw_table()
-_G711_ALAW = _g711_alaw_table()
 
 
 def encode_flac_verbatim(
@@ -1861,21 +1134,6 @@ def audio_features(binary_df: DataFrame) -> DataFrame:
     return binary_df.select("doc_id", "payload").mapInPandas(run, AUDIO_SCHEMA)
 
 
-def encode_ppm(w: int, h: int, channels: int, pixels: bytes) -> bytes:
-    """Re-encode raw pixels as binary PNM (P6 for 3 channels, P5 for
-    1) — the inverse of :func:`decode_image`'s PNM path, so
-    decode→transform→encode round-trips losslessly in pytest."""
-    if channels == 3:
-        magic = b"P6"
-    elif channels == 1:
-        magic = b"P5"
-    else:
-        raise ValueError(f"PNM holds 1 or 3 channels, got {channels}")
-    if len(pixels) != w * h * channels:
-        raise ValueError("pixel buffer does not match dimensions")
-    return magic + f"\n{w} {h}\n255\n".encode() + pixels
-
-
 def encode_png(w: int, h: int, channels: int, pixels: bytes) -> bytes:
     """Re-encode raw pixels as a real PNG: 8-bit grayscale or RGB,
     filter-0 scanlines, one zlib IDAT, CRC-checked chunks — the
@@ -2012,506 +1270,7 @@ def sample_frames(
     return binary_df.select("doc_id", "payload").mapInPandas(run, FRAME_SCHEMA)
 
 
-# -- TIFF (scanned-document corpora — strips; none/PackBits/LZW) ------
-
-
-def _tiff_packbits(data: bytes, expected: int) -> bytes:
-    out = bytearray()
-    pos = 0
-    while len(out) < expected:
-        if pos >= len(data):
-            raise ValueError("TIFF PackBits stream truncated")
-        n = data[pos]
-        pos += 1
-        if n < 128:
-            chunk = data[pos : pos + n + 1]
-            if len(chunk) != n + 1:
-                raise ValueError("TIFF PackBits literal truncated")
-            out += chunk
-            pos += n + 1
-        elif n > 128:
-            if pos >= len(data):
-                raise ValueError("TIFF PackBits run truncated")
-            out += bytes([data[pos]]) * (257 - n)
-            pos += 1
-        # n == 128: no-op
-    return bytes(out[:expected])
-
-
-def _tiff_lzw(data: bytes, expected: int) -> bytes:
-    """TIFF-variant LZW (spec §13): 8-bit symbols, codes packed
-    MSB-first, CLEAR=256/EOI=257, and the *early-change* convention —
-    the code width bumps when the next entry index reaches
-    2^width − 1 (one code earlier than GIF)."""
-    clear, eoi = 256, 257
-    out = bytearray()
-    acc = nbits = 0
-    width = 9
-    table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
-    prev: bytes | None = None
-    pos = 0
-    while len(out) < expected:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("TIFF LZW stream truncated")
-            acc = (acc << 8) | data[pos]
-            nbits += 8
-            pos += 1
-        nbits -= width
-        code = (acc >> nbits) & ((1 << width) - 1)
-        acc &= (1 << nbits) - 1
-        if code == clear:
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            width = 9
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("TIFF LZW first code out of range")
-            seq = table[code]
-        elif code < len(table):
-            seq = table[code]
-            table.append(prev + seq[:1])
-        elif code == len(table):
-            seq = prev + prev[:1]
-            table.append(seq)
-        else:
-            raise ValueError("TIFF LZW code out of range")
-        out += seq
-        prev = seq
-        if len(table) == (1 << width) - 1 and width < 12:
-            width += 1
-    if len(out) < expected:
-        raise ValueError(f"TIFF LZW produced {len(out)} of {expected}")
-    return bytes(out[:expected])
-
-
-def _decode_tiff(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Baseline TIFF (the scanned-document corpus format): II/MM byte
-    orders, first-IFD walk, strip organization, Compression 1 (none),
-    32773 (PackBits), and 5 (TIFF LZW with early change); 8-bit
-    grayscale (both photometric polarities), 8-bit RGB, and palette
-    images (16-bit ColorMap scaled to 8). Tiled, multi-IFD, JPEG-in-
-    TIFF, CCITT fax, and non-8-bit depths raise loudly."""
-    import struct
-
-    if payload[:4] == b"II*\x00":
-        end = "<"
-    elif payload[:4] == b"MM\x00*":
-        end = ">"
-    else:
-        raise ValueError(f"not a TIFF payload: {payload[:4]!r}")
-    if len(payload) < 8:
-        raise ValueError("TIFF header truncated")
-    (ifd_off,) = struct.unpack_from(end + "I", payload, 4)
-    if ifd_off + 2 > len(payload):
-        raise ValueError("TIFF IFD offset out of range")
-    (n_entries,) = struct.unpack_from(end + "H", payload, ifd_off)
-    tags: dict[int, tuple[int, int, int]] = {}
-    for i in range(n_entries):
-        at = ifd_off + 2 + 12 * i
-        if at + 12 > len(payload):
-            raise ValueError("TIFF IFD truncated")
-        tag, typ = struct.unpack_from(end + "HH", payload, at)
-        (cnt,) = struct.unpack_from(end + "I", payload, at + 4)
-        tags[tag] = (typ, cnt, at + 8)
-
-    def values(tag, default=None):
-        if tag not in tags:
-            return default
-        typ, cnt, vat = tags[tag]
-        size = {1: 1, 3: 2, 4: 4}.get(typ)
-        if size is None:
-            raise ValueError(f"TIFF tag {tag} has unsupported type {typ}")
-        total = size * cnt
-        at = vat
-        if total > 4:
-            (at,) = struct.unpack_from(end + "I", payload, vat)
-        if at + total > len(payload):
-            raise ValueError(f"TIFF tag {tag} data out of range")
-        fmt = {1: "B", 3: "H", 4: "I"}[typ]
-        return list(struct.unpack_from(end + fmt * cnt, payload, at))
-
-    def one(tag, default=None):
-        v = values(tag)
-        return v[0] if v else default
-
-    w = one(256)
-    h = one(257)
-    if not w or not h:
-        raise ValueError("TIFF missing ImageWidth/ImageLength")
-    if w * h > MAX_DECODE_PIXELS:
-        raise ValueError(
-            f"TIFF declares {w * h} pixels > MAX_DECODE_PIXELS"
-        )
-    comp = one(259, 1)
-    photo = one(262)
-    spp = one(277, 1)
-    bits = values(258, [8] * spp)
-    if any(b != 8 for b in bits) or len(bits) != spp:
-        raise NotImplementedError(
-            f"TIFF BitsPerSample {bits} (only 8-bit strips decode here)"
-        )
-    if photo is None:
-        raise ValueError("TIFF missing PhotometricInterpretation")
-    pred = one(317, 1)
-    if pred not in (1, 2):
-        # predictor 3 is float differencing — needs float samples this
-        # 8-bit tier doesn't carry
-        raise NotImplementedError(f"TIFF predictor {pred}")
-
-    def inflate(seg: bytes, expected: int, row_bytes: int) -> bytes:
-        if comp == 1:
-            if len(seg) < expected:
-                raise ValueError("TIFF uncompressed segment short")
-            out = seg[:expected]
-        elif comp == 32773:
-            out = _tiff_packbits(seg, expected)
-        elif comp == 5:
-            out = _tiff_lzw(seg, expected)
-        elif comp in (8, 32946):
-            # Deflate (TIFF6 tech note 2 / legacy Adobe code 32946):
-            # stdlib zlib, with the same allocation bound discipline
-            # as the PNG inflate (cap at expected+1, then verify)
-            import zlib
-
-            try:
-                d = zlib.decompressobj()
-                out = d.decompress(seg, expected + 1)
-            except zlib.error as exc:
-                raise ValueError(
-                    f"TIFF deflate segment is not a valid zlib "
-                    f"stream: {exc}"
-                ) from exc
-            if len(out) < expected:
-                raise ValueError("TIFF deflate segment short")
-            out = out[:expected]
-        else:
-            raise NotImplementedError(
-                f"TIFF compression {comp} requires a codec"
-            )
-        if pred == 2:
-            # horizontal differencing (tag 317): each sample stores
-            # the delta from the previous pixel's same sample within
-            # the row — silently skipping this scrambled every
-            # predictor-2 file, so it is decoded, not ignored
-            buf = bytearray(out)
-            for r0 in range(0, len(buf), row_bytes):
-                end = min(r0 + row_bytes, len(buf))
-                for i in range(r0 + spp, end):
-                    buf[i] = (buf[i] + buf[i - spp]) & 0xFF
-            out = bytes(buf)
-        return out
-
-    if 322 in tags or 323 in tags:
-        # tile organization (TIFF6 §15): fixed tw×tl tiles, padded at
-        # the right/bottom edges, left-to-right top-to-bottom, each
-        # compressed independently with the same codecs as strips
-        tw = one(322)
-        tl = one(323)
-        toffs = values(324)
-        tcounts = values(325)
-        if not tw or not tl or tw % 16 or tl % 16:
-            raise ValueError(f"TIFF tile size {tw}x{tl} not multiple of 16")
-        if not toffs or not tcounts or len(toffs) != len(tcounts):
-            raise ValueError("TIFF tile offsets/counts missing or mismatched")
-        across = -(-w // tw)
-        down = -(-h // tl)
-        if len(toffs) != across * down:
-            raise ValueError(
-                f"TIFF has {len(toffs)} tiles, grid needs {across * down}"
-            )
-        if across * tw * down * tl > 4 * MAX_DECODE_PIXELS:
-            raise ValueError("TIFF tile grid exceeds the allocation cap")
-        raw = bytearray(w * h * spp)
-        for ti, (so, sc) in enumerate(zip(toffs, tcounts)):
-            seg = payload[so : so + sc]
-            if len(seg) != sc:
-                raise ValueError("TIFF tile out of range")
-            tile = inflate(seg, tw * tl * spp, tw * spp)
-            ty, tx = divmod(ti, across)
-            x0, y0 = tx * tw, ty * tl
-            cols = min(tw, w - x0)
-            for yy in range(min(tl, h - y0)):
-                src = yy * tw * spp
-                dst = ((y0 + yy) * w + x0) * spp
-                raw[dst : dst + cols * spp] = tile[src : src + cols * spp]
-    else:
-        offs = values(273)
-        counts = values(279)
-        if not offs or not counts or len(offs) != len(counts):
-            raise ValueError(
-                "TIFF strip offsets/counts missing or mismatched"
-            )
-        rps = one(278, h)
-        raw = bytearray()
-        for si, (so, sc) in enumerate(zip(offs, counts)):
-            strip = payload[so : so + sc]
-            if len(strip) != sc:
-                raise ValueError("TIFF strip out of range")
-            rows = min(rps, h - si * rps)
-            raw += inflate(strip, rows * w * spp, w * spp)
-    if len(raw) != w * h * spp:
-        raise ValueError("TIFF strips do not cover the image")
-    if photo == 2:
-        if spp < 3:
-            raise ValueError("TIFF RGB with fewer than 3 samples")
-        if spp == 3:
-            return w, h, 3, bytes(raw)
-        out = bytearray(w * h * 3)  # drop extra samples (alpha)
-        for i in range(w * h):
-            out[i * 3 : i * 3 + 3] = raw[i * spp : i * spp + 3]
-        return w, h, 3, bytes(out)
-    if photo in (0, 1):
-        if spp != 1:
-            raise NotImplementedError("TIFF multi-sample grayscale")
-        if photo == 0:  # WhiteIsZero: invert into the usual polarity
-            raw = bytearray(255 - v for v in raw)
-        return w, h, 1, bytes(raw)
-    if photo == 3:
-        cmap = values(320)
-        if not cmap or len(cmap) != 3 * 256:
-            raise ValueError("TIFF palette ColorMap missing or mis-sized")
-        out = bytearray(w * h * 3)
-        for i, v in enumerate(raw):
-            o = i * 3
-            # ColorMap entries are 16-bit; scale by the 16-bit rule
-            out[o] = (cmap[v] * 255 + 32767) // 65535
-            out[o + 1] = (cmap[256 + v] * 255 + 32767) // 65535
-            out[o + 2] = (cmap[512 + v] * 255 + 32767) // 65535
-        return w, h, 3, bytes(out)
-    raise NotImplementedError(f"TIFF photometric {photo}")
-
-
-# -- GIF (web-corpus images/animations — LZW, 87a/89a) ----------------
-
-
-def _gif_lzw(data: bytes, min_code: int, expected: int) -> bytearray:
-    """GIF LZW decompression: variable 3-12 bit codes packed
-    LSB-first, CLEAR resets the dictionary, EOI ends the stream; a
-    code equal to the next free index is the classic KwKwK case.
-    Stops after ``expected`` indices (trailing bits are padding)."""
-    clear = 1 << min_code
-    eoi = clear + 1
-    out = bytearray()
-    acc = nbits = 0
-    width = min_code + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    prev: bytes | None = None
-    pos = 0
-    while len(out) < expected:
-        while nbits < width:
-            if pos >= len(data):
-                raise ValueError("GIF LZW stream truncated")
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
-            width = min_code + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("GIF LZW first code out of range")
-            seq = table[code]
-        elif code < len(table):
-            seq = table[code]
-            table.append(prev + seq[:1])
-        elif code == len(table):
-            seq = prev + prev[:1]
-            table.append(seq)
-        else:
-            raise ValueError("GIF LZW code out of range")
-        out += seq
-        prev = seq
-        if len(table) == (1 << width) and width < 12:
-            width += 1
-    if len(out) < expected:
-        raise ValueError(
-            f"GIF LZW produced {len(out)} of {expected} pixels"
-        )
-    return out[:expected]
-
-
-_GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _decode_gif_frames(payload: bytes, first_only: bool = False):
-    """Decode frames of a GIF87a/89a: global/local color tables,
-    interlacing, transparency, and the 89a disposal methods (none /
-    keep, restore-to-background, restore-to-previous), composing each
-    frame onto the logical-screen canvas. Disposal=2 clears the frame
-    rect to transparent (flattened as black in the RGB output),
-    matching mainstream decoders rather than the literal palette
-    background color. With ``first_only`` decoding stops after the
-    first composed frame (the :func:`decode_image` dispatch — the
-    all-frames pixel cap then applies to the logical screen only).
-    Returns ``(w, h, frames, delays_cs)`` with frames as full-canvas
-    RGB bytes and per-frame delays in centiseconds."""
-    import struct
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError(f"not a GIF payload: {payload[:6]!r}")
-    if len(payload) < 13:
-        raise ValueError("GIF header truncated")
-    w, h = struct.unpack_from("<HH", payload, 6)
-    if w < 1 or h < 1:
-        raise ValueError(f"bad GIF dimensions {w}x{h}")
-    if w * h > MAX_DECODE_PIXELS:
-        raise ValueError(
-            f"GIF declares {w * h} pixels > MAX_DECODE_PIXELS"
-        )
-    packed, bg = payload[10], payload[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 7)
-        gct = payload[pos : pos + 3 * n]
-        if len(gct) != 3 * n:
-            raise ValueError("GIF global color table truncated")
-        pos += 3 * n
-
-    def bg_rgb():
-        if gct is not None and 3 * bg + 3 <= len(gct):
-            return gct[3 * bg : 3 * bg + 3]
-        return b"\x00\x00\x00"
-
-    canvas = bytearray(bg_rgb() * (w * h))
-    frames: list[bytes] = []
-    delays: list[int] = []
-    transparent = None
-    disposal = 0
-    delay = 0
-    total_px = 0
-    while pos < len(payload):
-        b0 = payload[pos]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension
-            if pos + 2 > len(payload):
-                raise ValueError("GIF extension truncated")
-            label = payload[pos + 1]
-            pos += 2
-            if label == 0xF9:  # graphic control
-                if pos >= len(payload):
-                    raise ValueError("GIF graphic control truncated")
-                blen = payload[pos]
-                if blen >= 4:
-                    if pos + 5 > len(payload):
-                        raise ValueError("GIF graphic control truncated")
-                    flags = payload[pos + 1]
-                    (delay,) = struct.unpack_from("<H", payload, pos + 2)
-                    disposal = (flags >> 2) & 7
-                    transparent = payload[pos + 4] if flags & 1 else None
-            # skip sub-blocks (any extension)
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("GIF extension sub-blocks truncated")
-                blen = payload[pos]
-                pos += 1 + blen
-                if blen == 0:
-                    break
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"GIF unknown block 0x{b0:02x}")
-        if pos + 10 > len(payload):
-            raise ValueError("GIF image descriptor truncated")
-        ix, iy, iw, ih = struct.unpack_from("<HHHH", payload, pos + 1)
-        ipacked = payload[pos + 9]
-        pos += 10
-        if ix + iw > w or iy + ih > h or iw < 1 or ih < 1:
-            raise ValueError("GIF frame exceeds the logical screen")
-        ct = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 7)
-            ct = payload[pos : pos + 3 * n]
-            if len(ct) != 3 * n:
-                raise ValueError("GIF local color table truncated")
-            pos += 3 * n
-        if ct is None:
-            raise ValueError("GIF frame has no color table")
-        if pos >= len(payload):
-            raise ValueError("GIF image data truncated")
-        min_code = payload[pos]
-        if not 2 <= min_code <= 11:
-            raise ValueError(f"GIF LZW minimum code size {min_code}")
-        pos += 1
-        lzw = bytearray()
-        while True:
-            if pos >= len(payload):
-                raise ValueError("GIF image sub-blocks truncated")
-            blen = payload[pos]
-            lzw += payload[pos + 1 : pos + 1 + blen]
-            pos += 1 + blen
-            if blen == 0:
-                break
-        idx = _gif_lzw(bytes(lzw), min_code, iw * ih)
-        if ipacked & 0x40:  # interlaced: remap rows
-            rows = []
-            for start, step in _GIF_INTERLACE:
-                rows.extend(range(start, ih, step))
-            de = bytearray(iw * ih)
-            for src, dst in enumerate(rows):
-                de[dst * iw : (dst + 1) * iw] = \
-                    idx[src * iw : (src + 1) * iw]
-            idx = de
-        saved = bytes(canvas) if disposal == 3 else None
-        nct = len(ct) // 3
-        for yy in range(ih):
-            crow = ((iy + yy) * w + ix) * 3
-            irow = yy * iw
-            for xx in range(iw):
-                v = idx[irow + xx]
-                if v == transparent:
-                    continue
-                if v >= nct:
-                    raise ValueError("GIF pixel index outside color table")
-                o = crow + xx * 3
-                canvas[o : o + 3] = ct[3 * v : 3 * v + 3]
-        frames.append(bytes(canvas))
-        delays.append(delay)
-        if first_only:
-            # the caller wants only the composed first frame — skip
-            # the rest of the animation (and its all-frames pixel
-            # cap; the logical screen was capped at entry)
-            return w, h, frames, delays
-        total_px += w * h
-        if total_px > MAX_DECODE_PIXELS:
-            raise ValueError("GIF frames exceed MAX_DECODE_PIXELS")
-        if disposal == 2:
-            # "Restore to background": mainstream decoders (PIL's
-            # RGBA compositing, browsers, ffmpeg) clear the frame
-            # rect to TRANSPARENT, not to the global background
-            # color; flattened to the 3-channel output that is
-            # transparent-black (ADVICE r12). Painting the palette
-            # background color here would diverge from every
-            # reference decoder on animations that combine
-            # disposal=2 with a transparency index.
-            zero = b"\x00\x00\x00"
-            for yy in range(ih):
-                crow = ((iy + yy) * w + ix) * 3
-                for xx in range(iw):
-                    o = crow + xx * 3
-                    canvas[o : o + 3] = zero
-        elif disposal == 3 and saved is not None:
-            canvas = bytearray(saved)
-        transparent = None
-        disposal = 0
-        delay = 0
-    if not frames:
-        raise ValueError("GIF contains no image")
-    return w, h, frames, delays
-
-
-# -- video containers (stdlib demux: YUV4MPEG2 + animated GIF) -------
+# -- video container (stdlib demux: YUV4MPEG2) ------------------------
 
 _Y4M_COLORSPACES = {
     b"420": ("yuv420", 3, 2),       # bytes per 2 pixels = 3 (w*h*3//2)
@@ -2539,11 +1298,11 @@ _Y4M_COLORSPACES = {
 def demux_video(payload: bytes) -> dict:
     """Container-level video demux, stdlib only: YUV4MPEG2 (Y4M) raw
     planar streams, the container :func:`encode_y4m` feeds
-    ``llm_video_features``, and animated GIF (composed RGB frames).
-    Returns ``{"container", "width", "height", "fps_num", "fps_den",
-    "frame_kind", "frames"}`` where ``frames`` is the list of
-    per-frame byte payloads in stream order. AVI raises
-    ``NotImplementedError`` naming the container (a real deployment plugs pyav/ffmpeg into the same
+    ``llm_video_features``. Returns ``{"container", "width",
+    "height", "fps_num", "fps_den", "frame_kind", "frames"}`` where
+    ``frames`` is the list of per-frame byte payloads in stream
+    order. AVI and animated GIF raise ``NotImplementedError`` naming
+    the container (a real deployment plugs pyav/ffmpeg into the same
     dispatch); malformed containers raise ``ValueError``. Total
     declared pixels are capped by :data:`MAX_DECODE_PIXELS` — the
     same header-declared-allocation ceiling every decoder here
@@ -2602,26 +1361,20 @@ def demux_video(payload: bytes) -> dict:
                 "fps_num": fps_num, "fps_den": fps_den,
                 "frame_kind": kind, "frames": frames}
 
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        # animated GIF is a video-like source: full-canvas composed
-        # RGB frames, fps from the first nonzero centisecond delay
-        w, h, frames, delays = _decode_gif_frames(payload)
-        d = next((d for d in delays if d), 10)
-        return {"container": "gif", "width": w, "height": h,
-                "fps_num": 100, "fps_den": d,
-                "frame_kind": "rgb", "frames": frames}
     if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
         raise NotImplementedError("AVI video requires a codec library")
+    if payload[:6] in (b"GIF87a", b"GIF89a"):
+        raise NotImplementedError("animated GIF requires a codec library")
     raise ValueError(f"not a video container: {payload[:4]!r}")
 
 
 def decode_video_frame(kind: str, w: int, h: int,
                        data: bytes) -> tuple[int, int, int, bytes]:
-    """Decode one demuxed frame to row-major pixels: ``rgb`` frames
-    (animated GIF) pass through, ``gray`` and ``yuv*`` frames (Y4M)
-    are raw planar — chroma upsampled by a nearest-sample index map
-    and converted with the BT.601 full-range (JFIF) matrix;
-    ``*p10``/``*p12``/``*p16`` frames scale down to 8 bits first."""
+    """Decode one demuxed Y4M frame to row-major pixels: ``gray`` and
+    ``yuv*`` frames are raw planar — chroma upsampled by a
+    nearest-sample index map and converted with the BT.601 full-range
+    (JFIF) matrix; ``*p10``/``*p12``/``*p16`` frames scale down to
+    8 bits first."""
     if len(kind) > 3 and kind[-3] == "p" and kind[-2:].isdigit():
         # high-bit-depth planar frame: 2-byte little-endian samples;
         # a sample above the declared depth's ceiling is malformed.
@@ -2645,10 +1398,6 @@ def decode_video_frame(kind: str, w: int, h: int,
         half = ceil >> 1
         scaled = bytes((v * 255 + half) // ceil for v in a)
         return decode_video_frame(base, w, h, scaled)
-    if kind == "rgb":
-        if len(data) != w * h * 3:
-            raise ValueError("RGB frame size mismatch")
-        return w, h, 3, bytes(data)
     if kind == "gray":
         if len(data) != w * h:
             raise ValueError("mono frame size mismatch")
@@ -2757,6 +1506,18 @@ def video_features(binary_df: DataFrame) -> DataFrame:
     )
 
 
+def _resize(payload: bytes, target_bytes: int) -> tuple[int, str]:
+    """Truncate ``payload`` to ``target_bytes`` or right-pad it with
+    0x20; return the resized length and the md5 hex digest of it."""
+    import hashlib
+
+    if len(payload) >= target_bytes:
+        out = payload[:target_bytes]
+    else:
+        out = payload.ljust(target_bytes, b" ")
+    return len(out), hashlib.md5(out).hexdigest()
+
+
 def resize_payload(binary_df: DataFrame, target_bytes: int = 64) -> DataFrame:
     """Resize plumbing for image-like payloads: normalize every payload
     to a fixed byte budget (truncate, or right-pad with 0x20) and
@@ -2767,20 +1528,16 @@ def resize_payload(binary_df: DataFrame, target_bytes: int = 64) -> DataFrame:
     re-encoded bytes — the Spark-side contract (Arrow-batched
     mapInPandas, fixed output schema, per-payload independence) is
     what this function locks in."""
-    import hashlib
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            resized = [
-                (p[:target_bytes] if len(p) >= target_bytes else p.ljust(target_bytes, b" "))
-                for p in pdf["payload"]
-            ]
+            resized = [_resize(p, target_bytes) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "orig_bytes": [len(p) for p in pdf["payload"]],
-                    "out_bytes": [len(r) for r in resized],
-                    "out_md5": [hashlib.md5(r).hexdigest() for r in resized],
+                    "out_bytes": [r[0] for r in resized],
+                    "out_md5": [r[1] for r in resized],
                 }
             )
 
@@ -2822,23 +1579,19 @@ def multimodal_features(
     the fused form of :func:`extract_features` ∘ :func:`resize_payload`
     (joining their outputs would scan the binary column twice and add
     a shuffle join on doc_id for no reason)."""
-    import hashlib
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [extractor(p) for p in pdf["payload"]]
-            resized = [
-                (p[:target_bytes] if len(p) >= target_bytes else p.ljust(target_bytes, b" "))
-                for p in pdf["payload"]
-            ]
+            resized = [_resize(p, target_bytes) for p in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "n_bytes": [f[0] for f in feats],
                     "first_byte": [f[1] for f in feats],
                     "modality": modality,
-                    "out_bytes": [len(r) for r in resized],
-                    "out_md5": [hashlib.md5(r).hexdigest() for r in resized],
+                    "out_bytes": [r[0] for r in resized],
+                    "out_md5": [r[1] for r in resized],
                 }
             )
 

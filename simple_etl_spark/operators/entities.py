@@ -463,17 +463,6 @@ def dedupe_entities(entities: DataFrame) -> DataFrame:
     )
 
 
-def entity_backlog(articles: DataFrame, entities: DataFrame, limit: int | None = None) -> DataFrame:
-    """J1: articles not yet entity-processed — left-anti join on
-    article id (services/staging_pg.py:294-317)."""
-    out = articles.join(
-        entities, articles["id"] == entities["article_id"], "left_anti"
-    )
-    if limit is not None:
-        out = out.orderBy(F.desc("created_at")).limit(limit)
-    return out
-
-
 # SQL twin of deterministic_extractor over gold titles (positions are
 # not part of the comparable surface; they are offsets the oracle
 # can't cheaply reproduce and no analytics query consumes them).

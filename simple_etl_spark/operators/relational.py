@@ -24,10 +24,6 @@ from simple_etl_spark.queries import query
 DEC = "decimal(9,2)"
 
 
-def _dec(c: str, t: str = DEC) -> F.Column:
-    return F.col(c).cast(t)
-
-
 # ---------------------------------------------------------------------------
 # Aggregations (SURVEY §2.4)
 # ---------------------------------------------------------------------------

@@ -18,9 +18,9 @@ through :func:`read_table` / :func:`read_table_at`, which hand Spark
 the recorded schema, so resolving a snapshot launches no
 schema-inference job; :func:`table_rows` answers row counts from the
 manifest instead of a scan. A snapshot whose manifest (or its schema)
-is missing — a Hive-partitioned one, one written before manifests
-carried schemas, or one whose manifest write failed — is inferred and
-counted by Spark as before.
+is missing — a Hive-partitioned one, or one written before manifests
+carried schemas — is inferred and counted by Spark as before. A
+manifest that cannot be written aborts the commit.
 """
 
 from __future__ import annotations
@@ -239,14 +239,10 @@ def _commit(base: str, v: int) -> None:
     planning-time file skipping and metadata reads, and a crash
     between write and swap leaves no manifest-less committed state.
     The swap is the commit point: the pointer file is replaced
-    atomically (POSIX os.replace)."""
-    try:
-        write_manifest(os.path.join(base, f"v{v}"))
-    except Exception:
-        # the manifest is an optimization — a commit must never fail
-        # on it; reads fall back to inference and counts to a scan,
-        # and read_pruned raises loudly if the manifest is absent
-        pass
+    atomically (POSIX os.replace). A manifest error propagates before
+    the swap, so the commit aborts and the table stays at its prior
+    version; a retried commit rewrites the same ``v{v}``."""
+    write_manifest(os.path.join(base, f"v{v}"))
     tmp = _pointer_file(base) + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(str(v))

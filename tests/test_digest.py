@@ -13,7 +13,7 @@ import pytest
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from digest import agg_hash  # noqa: E402
+from digest import agg_hash, digest_queries  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -71,6 +71,19 @@ def test_change_and_duplicate_sensitive(frames):
     # xor alone would cancel a duplicated row pair; count+sum catch it
     doubled = base.union(spark.createDataFrame(rows[:2], schema))
     assert agg_hash(base)[0] != agg_hash(doubled)[0]
+
+
+def test_digest_queries_match_agg_hash(spark, sf_dir):
+    """``python tools/digest.py <dir> <query>...`` prints exactly the
+    registered queries' ``agg_hash``, one record per query, in order."""
+    from simple_etl_spark import queries
+
+    names = ["llm_resize", "m_clean_roundtrip"]
+    want = []
+    for name in names:
+        h, n = agg_hash(queries.queries()[name](spark, sf_dir))
+        want.append({"query": name, "dir": sf_dir, "rows": n, "hash": h})
+    assert digest_queries(spark, sf_dir, names) == want
 
 
 def test_cluster_validate_mode_cutover(tmp_path, monkeypatch):

@@ -214,8 +214,8 @@ def test_schema_recorded_only_for_unpartitioned_snapshots(spark, tmp_path):
 
 
 def test_manifest_less_snapshot_still_reads(spark, tmp_path):
-    """Snapshots without a manifest (written before it carried the
-    schema, or whose manifest write failed) infer and count as before."""
+    """Snapshots without a manifest (written before the store wrote
+    one) infer and count as before."""
     from simple_etl_spark.sources.manifest import MANIFEST_NAME
     from simple_etl_spark.sources.table_store import read_table, table_rows
 
@@ -226,6 +226,37 @@ def test_manifest_less_snapshot_still_reads(spark, tmp_path):
     got = read_table(spark, base)
     assert got.schema == spark.read.parquet(snap).schema
     assert got.count() == table_rows(spark, base) == 40
+
+
+def test_manifest_error_aborts_the_commit(spark, tmp_path, monkeypatch):
+    """A manifest that cannot be written fails the commit before the
+    pointer swap: the table stays at its prior version and rows, and a
+    retried commit succeeds."""
+    from simple_etl_spark.sources import table_store
+    from simple_etl_spark.sources.table_store import (
+        current_version,
+        read_table,
+        table_rows,
+    )
+
+    base = str(tmp_path / "abort")
+    write_table(spark.range(5).select(F.col("id").alias("v")), base)
+
+    def broken(path):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(table_store, "write_manifest", broken)
+    with pytest.raises(OSError, match="disk full"):
+        write_table(spark.range(9).select(F.col("id").alias("v")), base)
+    assert current_version(base) == 1
+    assert sorted(r["v"] for r in read_table(spark, base).collect()) == list(range(5))
+
+    monkeypatch.undo()
+    write_table(spark.range(9).select(F.col("id").alias("v")), base)
+    assert current_version(base) == 2
+    assert load_manifest(table_path(base)) is not None
+    assert table_rows(spark, base) == 9
+    assert sorted(r["v"] for r in read_table(spark, base).collect()) == list(range(9))
 
 
 def _jobs_in_group(spark, body) -> int:

@@ -1,11 +1,11 @@
-"""Real image decode with zero dependencies: PNG (the format
-encode_png feeds llm_image_features), PPM/PGM and BMP.
+"""Real image decode with zero dependencies: PNG, the one image format
+a registered query emits (encode_png feeds llm_image_features).
 
 These tests build fixture images byte-by-byte (no codec library exists
 to build them for us), verify the decoded pixels against
-independently-constructed expectations, pin the loud error for image
-formats without a built-in decoder, and drive the decode through the
-Spark mapInPandas plumbing (image_features).
+independently-constructed expectations, pin the loud error naming every
+other image, audio and video format at its dispatch seam, and drive the
+decode through the Spark mapInPandas plumbing (image_features).
 """
 
 from __future__ import annotations
@@ -15,9 +15,10 @@ import struct
 import pytest
 
 from simple_etl_spark.llm.multimodal import (
+    decode_audio,
     decode_image,
     demux_video,
-    encode_ppm,
+    encode_png,
     image_features,
 )
 
@@ -28,72 +29,25 @@ RGB_PIXELS = bytes(
     [255, 0, 0, 0, 255, 0, 0, 0, 255,
      255, 255, 255, 128, 128, 128, 0, 0, 0]
 )
-PPM_3x2 = b"P6\n3 2\n255\n" + RGB_PIXELS
-PPM_COMMENTED = b"P6\n# a comment\n3 # trailing\n2\n# more\n255\n" + RGB_PIXELS
-PGM_4x1 = b"P5\n4 1\n255\n" + bytes([0, 64, 128, 255])
+PNG_3x2 = encode_png(3, 2, 3, RGB_PIXELS)
 JPEG_MAGIC = b"\xff\xd8\xff\xe0\x00\x10JFIF"
 
-
-def _bmp(w: int, h: int, pixels_rgb: bytes, bpp: int = 24,
-         top_down: bool = False) -> bytes:
-    """Uncompressed BI_RGB BMP from row-major top-down RGB(A) bytes."""
-    nch = bpp // 8
-    stride = (w * nch + 3) & ~3
-    rows = []
-    for r in range(h):
-        row = bytearray()
-        for c in range(w):
-            px = pixels_rgb[(r * w + c) * nch : (r * w + c) * nch + nch]
-            row += bytes([px[2], px[1], px[0]]) + (px[3:4] if nch == 4 else b"")
-        row += b"\x00" * (stride - len(row))
-        rows.append(bytes(row))
-    if not top_down:
-        rows.reverse()
-    data = b"".join(rows)
-    dib = struct.pack(
-        "<IiiHHIIiiII", 40, w, (-h if top_down else h), 1, bpp, 0,
-        len(data), 2835, 2835, 0, 0,
-    )
-    head = struct.pack("<2sIHHI", b"BM", 54 + len(data), 0, 0, 54)
-    return head + dib + data
+# well-formed images of formats without a built-in decoder
+PPM_3x2 = b"P6\n3 2\n255\n" + RGB_PIXELS
+PGM_4x1 = b"P5\n4 1\n255\n" + bytes([0, 64, 128, 255])
+BMP_1x1 = (struct.pack("<2sIHHI", b"BM", 58, 0, 0, 54)
+           + struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 0, 0, 0, 0)
+           + b"\x00\x00\xff\x00")  # one red BI_RGB pixel, row padded
+# GIF89a with a NETSCAPE2.0 loop extension: the animated-GIF marker
+GIF_ANIMATED = (b"GIF89a\x01\x00\x01\x00\x00\x00\x00"
+                b"!\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00;")
 
 
 # -- decode correctness -----------------------------------------------------
 
-def test_ppm_decode_exact():
-    assert decode_image(PPM_3x2) == (3, 2, 3, RGB_PIXELS)
-
-
-def test_ppm_header_comments():
-    assert decode_image(PPM_COMMENTED) == (3, 2, 3, RGB_PIXELS)
-
-
-def test_pgm_decode_exact():
-    assert decode_image(PGM_4x1) == (4, 1, 1, bytes([0, 64, 128, 255]))
-
-
-def test_bmp24_bottom_up_decodes_to_topdown_rgb():
-    assert decode_image(_bmp(3, 2, RGB_PIXELS)) == (3, 2, 3, RGB_PIXELS)
-
-
-def test_bmp32_top_down():
-    rgba = bytes([1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16])
-    assert decode_image(_bmp(2, 2, rgba, bpp=32, top_down=True)) == (
-        2, 2, 4, rgba,
-    )
-
-
-def test_ppm_roundtrip_through_encode():
-    w, h, nch, px = decode_image(PPM_3x2)
-    assert encode_ppm(w, h, nch, px) == PPM_3x2
-    assert decode_image(encode_ppm(w, h, nch, px)) == (w, h, nch, px)
-
-
 def test_png_roundtrip_through_encode():
     """encode_png is the lossless inverse of the real PNG decoder —
     the contract the graded llm_image_features query rests on."""
-    from simple_etl_spark.llm.multimodal import encode_png
-
     # grayscale, non-multiple-of-anything dims, full byte range
     w, h = 19, 7
     gray = bytes((x * 31 + y * 57) % 256 for y in range(h) for x in range(w))
@@ -113,11 +67,7 @@ def test_png_roundtrip_through_encode():
 
 
 @pytest.mark.parametrize("junk", [
-    b"", b"notanimage", b"P6\n3 2\n255\n\x00\x00",      # truncated pixels
-    b"P6\n0 2\n255\n", b"P6\n3 2\n65535\n" + RGB_PIXELS,  # bad dims / 16-bit
-    b"BM" + b"\x00" * 10,                                 # truncated header
-    b"GIF87a\x01\x00\x01\x00", b"GIF89a\x01\x00\x01\x00",  # truncated
-    b"II*\x00\x08\x00\x00\x00", b"MM\x00*\x00\x00\x00\x08",  # TIFF, no IFD
+    b"", b"notanimage",
     b"FORM\x00\x00\x01\x00AIFF",                        # audio, not image
     b"RIFF\x00\x00\x00\x00AVI LIST",                     # video, not image
 ])
@@ -129,39 +79,24 @@ def test_malformed_payloads_raise_value_error(junk):
 @pytest.mark.parametrize("fn,payload,name", [
     (decode_image, JPEG_MAGIC, "JPEG"),
     (demux_video, b"RIFF\x00\x00\x00\x00AVI LIST", "AVI"),
+    # truncated inputs stop at the seam too: nothing reads past the magic
+    (decode_image, b"P6\n3 2\n255\n\x00\x00", "PPM"),
+    (decode_image, b"P6\n0 2\n255\n", "PPM"),
+    (decode_image, b"P6\n3 2\n65535\n" + RGB_PIXELS, "PPM"),
+    (decode_image, b"BM" + b"\x00" * 10, "BMP"),
+    (decode_image, b"GIF87a\x01\x00\x01\x00", "GIF"),
+    (decode_image, b"GIF89a\x01\x00\x01\x00", "GIF"),
+    (decode_image, b"II*\x00\x08\x00\x00\x00", "TIFF"),
+    (decode_image, b"MM\x00*\x00\x00\x00\x08", "TIFF"),
+    (decode_image, PGM_4x1, "PGM"),
+    (decode_audio, b"FORM\x00\x00\x00\x04AIFF", "AIFF"),
+    (decode_audio, b"FORM\x00\x00\x00\x04AIFC", "AIFC"),
+    (demux_video, GIF_ANIMATED, "animated GIF"),
 ])
 def test_unsupported_formats_fail_naming_the_format(fn, payload, name):
-    with pytest.raises(NotImplementedError, match=name):
+    with pytest.raises(NotImplementedError, match=name) as err:
         fn(payload)
-
-
-def test_bmp_remaining_gates_and_malformed_rle():
-    bad = bytearray(_bmp(3, 2, RGB_PIXELS))
-    bad[30] = 4  # BI_JPEG (embedded codec): still genuinely gated
-    with pytest.raises(NotImplementedError):
-        decode_image(bytes(bad))
-    bad[30] = 1  # RLE8 on 24-bpp data is malformed, not gated (r13)
-    with pytest.raises(ValueError):
-        decode_image(bytes(bad))
-
-
-def test_bmp_core_header_rejected_not_misread():
-    """A BITMAPCOREHEADER (12-byte DIB) file must raise, not silently
-    read bpp/compression from BITMAPINFOHEADER offsets (ADVICE r8)."""
-    # 2x1 24-bit BITMAPCOREHEADER BMP: 14-byte file header + 12-byte DIB
-    dib = struct.pack("<IHHHH", 12, 2, 1, 1, 24)
-    data = bytes([0, 0, 255, 0, 255, 0]) + b"\x00\x00"  # one padded row
-    head = struct.pack("<2sIHHI", b"BM", 14 + 12 + len(data), 0, 0, 26)
-    payload = head + dib + data + b"\x00" * 40  # pad past 54 so parsing starts
-    with pytest.raises(NotImplementedError):
-        decode_image(payload)
-
-
-def test_bmp_data_offset_inside_header_rejected():
-    bad = bytearray(_bmp(3, 2, RGB_PIXELS))
-    struct.pack_into("<I", bad, 10, 20)  # pixel offset inside the DIB
-    with pytest.raises(ValueError):
-        decode_image(bytes(bad))
+    assert err.type is NotImplementedError
 
 
 # -- PNG (stdlib zlib DEFLATE + scanline filters) ---------------------------
@@ -539,24 +474,28 @@ def _binary_df(spark, payloads: dict[int, bytes]):
 
 def test_image_features_real_decode(spark):
     df = _binary_df(spark, {
-        1: PPM_3x2,
-        2: _bmp(3, 2, RGB_PIXELS),
-        3: PGM_4x1,
+        1: PNG_3x2,
+        2: _png(3, 2, 2, RGB_PIXELS, filters=[4, 2]),
+        3: encode_png(4, 1, 1, bytes([0, 64, 128, 255])),
         4: b"\x89PNG\r\n\x1a\n" + b"\x00" * 16,  # gated -> NULL features
         5: b"garbage",                            # junk  -> NULL features
         6: JPEG_MAGIC,                            # no built-in decoder
+        7: PPM_3x2,
+        8: BMP_1x1,
+        9: PGM_4x1,
     })
     rows = {r["doc_id"]: r for r in image_features(df).collect()}
     mean_rgb = sum(RGB_PIXELS) // len(RGB_PIXELS)
     assert (rows[1]["width"], rows[1]["height"], rows[1]["channels"],
             rows[1]["mean_px"]) == (3, 2, 3, mean_rgb)
-    # BMP of the same pixels decodes to the identical features
+    # a differently-filtered PNG of the same pixels decodes to the
+    # identical features
     assert rows[2] == rows[1].__class__(**{**rows[1].asDict(), "doc_id": 2})
     assert (rows[3]["width"], rows[3]["channels"],
             rows[3]["mean_px"]) == (4, 1, (0 + 64 + 128 + 255) // 4)
-    # malformed, junk and unsupported formats yield NULL features, not
-    # a task failure
-    for did in (4, 5, 6):
+    # malformed, junk and unsupported formats (including well-formed
+    # PPM, BMP and PGM images) yield NULL features, not a task failure
+    for did in (4, 5, 6, 7, 8, 9):
         assert rows[did]["width"] is None and rows[did]["mean_px"] is None
 
 
@@ -564,7 +503,7 @@ def test_null_payload_yields_null_features_not_task_failure(spark):
     """A NULL payload cell (e.g. encode(NULL text)) must produce NULL
     features, not a TypeError that kills the executor task."""
     df = spark.createDataFrame(
-        [(1, bytearray(PPM_3x2)), (2, None)], "doc_id bigint, payload binary"
+        [(1, bytearray(PNG_3x2)), (2, None)], "doc_id bigint, payload binary"
     )
     feats = {r["doc_id"]: r for r in image_features(df).collect()}
     assert feats[1]["width"] == 3 and feats[2]["width"] is None
@@ -620,7 +559,7 @@ def test_image_features_null_for_bad_idat(spark):
     ihdr = _s.pack(">IIBBBBB", 2, 1, 8, 0, 0, 0, 0)
     bad = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
            + chunk(b"IDAT", b"notzlib") + chunk(b"IEND", b""))
-    df = _binary_df(spark, {1: bad, 2: PPM_3x2})
+    df = _binary_df(spark, {1: bad, 2: PNG_3x2})
     rows = {r["doc_id"]: r for r in image_features(df).collect()}
     assert rows[1]["width"] is None
     assert rows[2]["width"] == 3
@@ -699,194 +638,6 @@ def test_png_sub8_grayscale_interlaced():
     pixels = bytes(b * 255 for b in bits)
     payload = _adam7_png(w, h, 0, bytes(bits), depth=1)
     assert decode_image(payload) == (w, h, 1, pixels)
-
-
-# -- palette / RLE BMP (r13) -------------------------------------------------
-
-def _bmp_pal(w, h, palette_rgb, idx=None, bpp=8, compression=0,
-             data=None, used=None):
-    """Palette BMP builder: BGRA color table, uncompressed rows packed
-    MSB-first bottom-up 4-byte-padded from ``idx`` (top-down indices),
-    or raw ``data`` bytes for RLE streams."""
-    n = used if used is not None else len(palette_rgb)
-    table = b"".join(bytes([b, g, r, 0]) for (r, g, b) in palette_rgb)
-    if data is None:
-        per = 8 // bpp
-        stride = ((w * bpp + 31) // 32) * 4
-        rows = []
-        for r in range(h):
-            row = bytearray(stride)
-            for x in range(w):
-                shift = 8 - bpp * ((x % per) + 1)
-                row[x // per] |= idx[r * w + x] << shift
-            rows.append(bytes(row))
-        rows.reverse()
-        data = b"".join(rows)
-    off = 14 + 40 + len(table)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, bpp, compression,
-                      len(data), 2835, 2835, n, 0)
-    head = struct.pack("<2sIHHI", b"BM", off + len(data), 0, 0, off)
-    return head + dib + table + data
-
-
-_PAL = [(0, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255)]  # K G B W
-
-
-def _expand(idx):
-    return b"".join(bytes(_PAL[v]) for v in idx)
-
-
-def test_bmp_palette_uncompressed_depths():
-    w, h = 5, 3
-    idx = [(x + y) % 4 for y in range(h) for x in range(w)]
-    for bpp in (8, 4):
-        got = decode_image(_bmp_pal(w, h, _PAL, idx=idx, bpp=bpp))
-        assert got == (w, h, 3, _expand(idx)), bpp
-    # 1-bit: palette may hold at most 2 entries at 1 bpp
-    ones = [v & 1 for v in idx]
-    got = decode_image(_bmp_pal(w, h, _PAL[:2], idx=ones, bpp=1))
-    assert got == (w, h, 3, _expand(ones))
-    with pytest.raises(ValueError, match="palette entries"):
-        decode_image(_bmp_pal(w, h, _PAL, idx=ones, bpp=1))
-
-
-def test_bmp_rle8_runs_absolute_delta_eob():
-    """Hand-built RLE8 stream exercising encoded runs, an absolute
-    run with its pad byte, EOL, a position delta (skipped pixels stay
-    index 0 per spec), and EOB."""
-    w, h = 4, 3
-    data = bytes([
-        4, 1,              # y=0 (bottom): 4x green
-        0, 0,              # EOL
-        0, 3, 0, 2, 3, 0,  # absolute [black, blue, white] + pad
-        1, 1,              # one green at x=3
-        0, 0,              # EOL
-        0, 2, 1, 0,        # delta dx=1 dy=0 -> x=1
-        2, 3,              # 2x white
-        0, 1,              # EOB
-    ])
-    got = decode_image(_bmp_pal(w, h, _PAL, bpp=8, compression=1,
-                                data=data))
-    exp = _expand([0, 3, 3, 0,
-                   0, 2, 3, 1,
-                   1, 1, 1, 1])
-    assert got == (w, h, 3, exp)
-
-
-def test_bmp_rle4_nibble_runs():
-    w, h = 5, 2
-    data = bytes([
-        5, 0x12,            # y=0: nibbles 1,2,1,2,1
-        0, 0,               # EOL
-        0, 4, 0x30, 0x21,   # absolute [3,0,2,1] (2 bytes, aligned)
-        1, 0x30,            # one nibble 3 at x=4
-        0, 1,               # EOB
-    ])
-    got = decode_image(_bmp_pal(w, h, _PAL, bpp=4, compression=2,
-                                data=data))
-    exp = _expand([3, 0, 2, 1, 3,
-                   1, 2, 1, 2, 1])
-    assert got == (w, h, 3, exp)
-
-
-def test_bmp_palette_bounds_fail_loud():
-    w, h = 2, 1
-    # biClrUsed = 2 but a pixel references index 3
-    bad = _bmp_pal(w, h, _PAL[:2], idx=[0, 1], bpp=8, used=2)
-    bad = bytearray(bad)
-    bad[-4] = 3  # bottom row, first pixel byte
-    with pytest.raises(ValueError, match="color table"):
-        decode_image(bytes(bad))
-    # truncated RLE stream
-    with pytest.raises(ValueError, match="truncated|RLE"):
-        decode_image(_bmp_pal(w, h, _PAL, bpp=8, compression=1,
-                              data=bytes([4, 1])))
-
-
-def _bmp_bitfields(w, h, pixels, masks, bpp=16, dib=40, amask=0,
-                   top_down=False):
-    """BI_BITFIELDS BMP: ``pixels`` is a top-down list of packed
-    integer pixel values; masks = (r, g, b)."""
-    pxw = bpp // 8
-    stride = (w * pxw + 3) & ~3
-    rows = []
-    for r in range(h):
-        row = bytearray()
-        for x in range(w):
-            row += pixels[r * w + x].to_bytes(pxw, "little")
-        row += b"\x00" * (stride - len(row))
-        rows.append(bytes(row))
-    if not top_down:
-        rows.reverse()
-    data = b"".join(rows)
-    extra = b""
-    if dib == 40:
-        extra = struct.pack("<III", *masks)
-    hdr_fields = struct.pack(
-        "<IiiHHIIiiII", dib, w, (-h if top_down else h), 1, bpp, 3,
-        len(data), 0, 0, 0, 0,
-    )
-    if dib > 40:
-        hdr_fields += struct.pack("<III", *masks)
-        hdr_fields += struct.pack("<I", amask)
-        hdr_fields += b"\x00" * (dib - 56)
-    off = 14 + dib + len(extra)
-    head = struct.pack("<2sIHHI", b"BM", off + len(data), 0, 0, off)
-    return head + hdr_fields + extra + data
-
-
-def test_bmp_bitfields_565_and_8888():
-    # RGB565 on a 40-byte header (masks follow the header)
-    def pack565(r, g, b):
-        return ((r >> 3) << 11) | ((g >> 2) << 5) | (b >> 3)
-
-    pix = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (255, 255, 255)]
-    bmp = _bmp_bitfields(2, 2, [pack565(*p) for p in pix],
-                         (0xF800, 0x07E0, 0x001F))
-    w, h, ch, out = decode_image(bmp)
-    assert (w, h, ch) == (2, 2, 3)
-    exp = []
-    for r, g, b in pix:
-        exp += [((r >> 3) * 255 + 15) // 31, ((g >> 2) * 255 + 31) // 63,
-                ((b >> 3) * 255 + 15) // 31]
-    assert out == bytes(exp)
-    # ARGB8888 on a V3 (56-byte) header with an alpha mask -> RGBA out
-    vals = [0x80FF0000, 0x0100FF00, 0xFF0000FF, 0x00FFFFFF]
-    bmp = _bmp_bitfields(
-        2, 2, vals, (0x00FF0000, 0x0000FF00, 0x000000FF),
-        bpp=32, dib=56, amask=0xFF000000, top_down=True,
-    )
-    w, h, ch, out = decode_image(bmp)
-    assert (w, h, ch) == (2, 2, 4)
-    exp = bytearray()
-    for v in vals:
-        exp += bytes([(v >> 16) & 255, (v >> 8) & 255, v & 255, v >> 24])
-    assert out == bytes(exp)
-
-
-def test_bmp_bitfields_555_and_malformed_masks():
-    def pack555(r, g, b):
-        return ((r >> 3) << 10) | ((g >> 3) << 5) | (b >> 3)
-
-    pix = [(8, 16, 248)]
-    bmp = _bmp_bitfields(1, 1, [pack555(*p) for p in pix],
-                         (0x7C00, 0x03E0, 0x001F))
-    _, _, ch, out = decode_image(bmp)
-    assert ch == 3
-    assert out == bytes([(1 * 255 + 15) // 31, (2 * 255 + 15) // 31, 255])
-    # non-contiguous mask fails loud
-    bad = _bmp_bitfields(1, 1, [0], (0xF0F0, 0x03E0, 0x001F))
-    with pytest.raises(ValueError, match="contiguous"):
-        decode_image(bad)
-    # zero green mask fails loud
-    bad = _bmp_bitfields(1, 1, [0], (0x7C00, 0, 0x001F))
-    with pytest.raises(ValueError, match="nonzero"):
-        decode_image(bad)
-    # 24-bpp bitfields is malformed
-    bad = bytearray(_bmp(2, 1, RGB_PIXELS[:6]))
-    bad[30] = 3
-    with pytest.raises(ValueError, match="16/32"):
-        decode_image(bytes(bad))
 
 
 def test_png_header_bomb_is_rejected():

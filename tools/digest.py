@@ -14,9 +14,20 @@ hashing: a fault-induced recompute can legally reorder a
 floating-point aggregation and move the last ulp, which must not read
 as a clean-vs-faulted or cfgA-vs-cfgB mismatch (ADVICE r11). 9 sig
 digits is far below any real signal and far above reorder noise.
+
+Run as a script, it digests registered queries, e.g. to prove a
+refactor leaves their outputs unchanged::
+
+  python tools/digest.py <data_dir> <query> [<query> ...]
+
+It prints one JSON line per query: ``{"query", "dir", "rows", "hash"}``.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import sys
 
 
 def agg_hash(df) -> tuple[str, int]:
@@ -53,3 +64,38 @@ def agg_hash(df) -> tuple[str, int]:
     ).collect()[0]
     n = agg["n"]
     return f"agg:{repr(sorted(cols))}:{n}:{agg['s']}:{agg['x']}", n
+
+
+def digest_queries(spark, data_dir: str, names) -> list[dict]:
+    """``agg_hash`` of each named registered query over ``data_dir``."""
+    from simple_etl_spark import queries as q
+
+    fns = q.queries()
+    out = []
+    for name in names:
+        h, n = agg_hash(fns[name](spark, data_dir))
+        out.append({"query": name, "dir": data_dir, "rows": n, "hash": h})
+    return out
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    if len(args) < 2:
+        raise SystemExit(
+            "usage: python tools/digest.py <data_dir> <query> [<query> ...]")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from simple_etl_spark.engine import get_spark, tune_for_input
+
+    data_dir, names = args[0], args[1:]
+    spark = get_spark("digest")
+    tune_for_input(spark, data_dir)
+    try:
+        for rec in digest_queries(spark, data_dir, names):
+            print(json.dumps(rec), flush=True)
+    finally:
+        spark.stop()
+
+
+if __name__ == "__main__":
+    main()
