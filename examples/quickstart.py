@@ -53,12 +53,18 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> None:
     )
 
     print("== ANN search ==")
-    from simple_etl_spark.llm.similarity import brute_force_topk
+    import math
+
+    from simple_etl_spark.llm.similarity import brute_force_topk_integral
 
     emb = cat["embeddings"]
-    top = brute_force_topk(emb, emb.filter(F.col("vec_id") < 2), k=3).collect()
+    queries = emb.filter(F.col("vec_id") < 2)
+    top = brute_force_topk_integral(emb, queries, k=3).collect()
     for r in top:
-        print(f"  q{r['query_id']} -> n{r['neighbor_id']} score={r['score_q']}")
+        # the exposed key is the signed squared cosine in pico-units
+        sign = -1.0 if r["dot_e9"] < 0 else 1.0
+        cos = sign * math.sqrt(abs(r["score2_e12"]) / 10**12)
+        print(f"  q{r['query_id']} -> n{r['neighbor_id']} cosine={cos:.6f}")
 
     print("== snapshot store ==")
     from simple_etl_spark.sources.manifest import prune_files, read_pruned

@@ -611,11 +611,15 @@ def llm_label_outliers(cat: Catalog) -> DataFrame:
     # here because the min top1-top2 margin on this corpus is ~2.4e-4,
     # ten orders above float64 reduction-order drift — guarded by
     # tests/test_ivf.py::test_assignment_margins_dwarf_float_drift);
-    # candidates are (query 2-probe cells) x (corpus cell); rescore is
-    # the engine's exact-decimal dot/norms (decimal(12,10) elements,
-    # decimal(30,20) accumulator) with the double-division cosine
-    # exposed at the 6-dp discipline. k-means TRAINING stays
-    # pytest-locked (NumPy reference + drift pin of the literal).
+    # candidates are (query 2-probe cells) x (corpus cell). The oracle
+    # ranks on the double-division cosine of the exact-decimal
+    # dot/norms (decimal(12,10) elements, decimal(30,20) accumulator);
+    # the engine ranks on the integral key (signed cos² in pico-units),
+    # which orders the same wherever adjacent scores differ by more
+    # than its 10^-12 truncation — guarded by tests/test_ivf.py::
+    # test_rescore_margins_and_quantization_boundaries. Both expose
+    # that decimal cosine at the 6-dp discipline. k-means TRAINING
+    # stays pytest-locked (NumPy reference + drift pin of the literal).
     oracle=rf"""WITH
 cents(cid, ce) AS (VALUES
         (0, [0.023642688312305073, 0.008970353845036803, 0.15521838595011123, -0.31688650409950625, 0.03147180818974308, -0.06923718378019929, -0.04111496695050159, 0.03304561464567617, 0.19809020310280234, -0.07604641445042652, -0.05993346203725498, 0.03524526175201056, -0.15423989799778312, -0.04869930096952214, -0.051785594007274505, -0.017256828299132245, 0.2124682287110797, 0.13975899409274506, 0.07031622344500697, 0.11057425385105235, -0.20695498523294822, 0.04500777018933122, -0.04133901124880827, -0.06997847358777305, 0.016129559740749762, 0.26942198738334433, 0.32803110878397485, -0.023292251444356777, -0.052340032520319525, 0.2440254735180953, -0.10532720640859354, 0.2223049705941523, 0.01853989076119037, -0.13914296058793044, 0.04808791278650299, -0.18073793952723213, -0.015770322738916227, 0.07340451138739942, 0.08730750690431253, 0.018284979026431062, 0.0017939301041925916, -0.009037097917831536, 0.013883600011845522, 0.006364735814950957, 0.0625854023422517, 0.10434608954003388, 0.10390646962573073, -0.18806953505263566, 0.02011670478922705, -0.1694245195559578, 0.00714783164727109, 0.08618913181104998, 0.03205694863291529, -0.1977882327549795, 0.08220013661748572, 0.06649508316024262, -0.03562918657323097, 0.02187512325642322, -0.247006575490941, -0.056647123840614606, -0.059750641598646466, 0.1323994865548135, 0.1458516166637642, -0.15606812257836922]::DOUBLE[]),

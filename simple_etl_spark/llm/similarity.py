@@ -8,14 +8,14 @@ an IVF-style inverted file keyed either by a precomputed assignment
 search). At 100 TB the bucket column is the partition key, so
 Catalyst prunes the scan to the probed buckets.
 
-Numeric strategy (two-phase): candidate pairs are scored with plain
-float64 codegen arithmetic (fast, but reduction-order sensitive in
-the last ulps), and only the rows that can appear in the result —
-the per-query top-(k+margin), or the pairs inside an epsilon band of
-the near-dup threshold — are rescored with the DECIMAL-exact dot
-product (order-independent, reproduced bit-for-bit by an external
-SQL oracle). Every *reported* score comes from the exact path; the
-float64 path only prunes, with margins far above its error bound.
+Numeric strategy: every ranking and every threshold verdict is made
+on one integral key — the signed squared cosine in pico-units,
+computed with exact integer arithmetic from the decimal(12,10)
+canonical elements (see the integral-tier section below). It is
+order-independent and reproduced term for term by the SQL oracles.
+The threshold ops put a float64 band prune in front of the key
+(:func:`_prune_band_filter`); it only discards pairs, with a band far
+above its error bound, and never decides membership.
 """
 
 from __future__ import annotations
@@ -78,185 +78,6 @@ def dot_fast(a: Column, b: Column) -> Column:
         a, b, lambda x, y: x.cast("double") * y.cast("double")
     )
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def brute_force_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    prereduce: bool | None = None,
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query set against the
-    corpus, float64-score every pair, then exact-rescore only the
-    top-(k+margin) per query (see :func:`_two_phase_topk`).
-
-    One pass over the corpus, no corpus self-join. The per-query
-    ranking window shuffles |corpus| rows per query — ``prereduce``
-    cuts each map task's contribution to that shuffle down to its
-    local per-query top-(k+margin) first (the TakeOrderedAndProject
-    pattern generalized to query batches; results are identical).
-    Default ``None`` auto-enables it once the corpus scan is wide
-    enough that the shuffle saving beats the Arrow hop (see
-    :data:`PREREDUCE_MIN_PARTITIONS`); pass True/False to force."""
-    q = _side(queries, id_col, vec_col, "query_id", "q")
-    c = _side(embeddings, id_col, vec_col, "neighbor_id", "c")
-    return _two_phase_topk(
-        q, c, F.col("query_id") != F.col("neighbor_id"), k,
-        prereduce=prereduce,
-    )
-
-
-def _vec_nd_cols(vec_col: str, tag: str) -> list[Column]:
-    """The standard per-side float64 carry columns: the raw vector
-    (``{tag}_vec``) and its double norm (``{tag}_nd``). Single owner
-    of this recipe — :func:`_side` (top-k paths) and
-    :func:`_integral_side` (``keep_vec`` threshold paths) both build
-    their sides from it, so the prune and ranking tiers can never
-    drift on what the fast denominator means."""
-    return [
-        F.col(vec_col).alias(f"{tag}_vec"),
-        F.sqrt(dot_fast(F.col(vec_col), F.col(vec_col))).alias(f"{tag}_nd"),
-    ]
-
-
-def _fast_cosine() -> Column:
-    """Cheap float64 cosine of a joined pair carrying both sides'
-    carry columns (see :func:`_vec_nd_cols`). ``try_divide``: 0/0
-    (zero-norm) scores NULL, never an ANSI error. NaN semantics are
-    the CALLER's job — the top-k path drops NULL/NaN before ranking
-    (window vs pandas NaN order), while the prune path lets NaN pairs
-    through (Spark compares NaN greater than any value, so they pass
-    the band filter) because membership belongs to the integral
-    verdict, which never admits a non-finite vector (the decimal
-    lift has no NaN/Inf representation)."""
-    return F.try_divide(
-        dot_fast(F.col("q_vec"), F.col("c_vec")),
-        F.col("q_nd") * F.col("c_nd"),
-    )
-
-
-def _side(df: DataFrame, id_col: str, vec_col: str, out_id: str, tag: str,
-          bucket_col: str | None = None) -> DataFrame:
-    cols = [F.col(id_col).alias(out_id), *_vec_nd_cols(vec_col, tag)]
-    if bucket_col:
-        cols.insert(1, F.col(bucket_col).alias(f"{tag}_bucket"))
-    return df.select(*cols)
-
-
-# Auto-enable the map-side prereduce once the candidate scan is at
-# least this many partitions wide. The window's shuffle input is
-# |C|·|Q| rows; the prereduce caps it at partitions·(k+margin)·|Q|,
-# but costs one Arrow hop over the scored pairs. At ≥8 scan partitions
-# (≈ a GiB of parquet at default bin sizing, or any at-scale table)
-# the shuffle saving dominates; below that the hop is pure overhead on
-# a shuffle that already fits one exchange.
-PREREDUCE_MIN_PARTITIONS = 8
-
-
-def _local_topk_prereduce(fast: DataFrame, km: int) -> DataFrame:
-    """Map-side top-``km`` per query within each Arrow batch, before
-    the global ranking window.
-
-    The global window shuffles every scored pair on ``query_id`` —
-    |Q|·|C| rows at brute-force scale, the acknowledged 100 TB
-    bottleneck. This pass keeps only each batch's top-``km`` per
-    query, shrinking the window's input to ≤ km·|Q| rows per batch
-    while provably preserving the result: a pair in the global
-    top-``km`` for its query is beaten by < km pairs overall, hence by
-    < km pairs inside its own batch, so no batch-local cut can drop
-    it (the same argument TakeOrderedAndProject relies on). NaN
-    scores are filtered out of the pair stream upstream
-    (:func:`_two_phase_topk`), so pandas' NaN-last sort order and the
-    window's NaN-first order can never disagree here."""
-
-    def _local(batches):
-        for pdf in batches:
-            pdf = pdf.sort_values(
-                ["query_id", "_fast", "neighbor_id"],
-                ascending=[True, False, True],
-            )
-            yield pdf.groupby("query_id", sort=False).head(km)
-
-    return fast.mapInPandas(_local, fast.schema)
-
-
-def _two_phase_topk(
-    q: DataFrame, c: DataFrame, cond, k: int, margin: int = 5,
-    prereduce: bool | None = None,
-) -> DataFrame:
-    """Double-precision scoring over all candidate pairs, exact decimal
-    rescore of the per-query top-(k+margin) only. The margin covers
-    rank flips near the cut: double vs decimal scores differ by ulps
-    (~1e-12 for unit-magnitude embeddings), so a flip requires two true
-    scores closer than that — margin 5 is overkill and cheap, since the
-    decimal path now runs on k+5 rows per query instead of |corpus|.
-
-    ``prereduce`` inserts a map-side per-batch top-(k+margin) cut
-    before the ranking window (see :func:`_local_topk_prereduce`) —
-    identical results, and the window's shuffle input drops from
-    |Q|·|C| to ~(k+margin)·|Q| per batch. ``None`` auto-enables it
-    when the candidate side scans ≥ :data:`PREREDUCE_MIN_PARTITIONS`
-    partitions (the supported-API width probe — no job runs); the
-    Arrow hop only pays for itself once the candidate set is large.
-
-    Zero-norm vectors have no defined cosine and are excluded from
-    results: their 0/0 score is NULL via ``try_divide`` (in ANSI mode
-    a plain division would *error*; in non-ANSI it would be NaN,
-    which Spark's descending window ranks first while pandas sorts
-    last). Dropping NULL/NaN scores before any ranking keeps the
-    window and the map-side prereduce in exact agreement and stops a
-    zero-norm vector shadowing real neighbors."""
-    if prereduce is None:
-        prereduce = c.rdd.getNumPartitions() >= PREREDUCE_MIN_PARTITIONS
-    fast = (
-        F.broadcast(q)
-        .join(c, cond)
-        .withColumn("_fast", _fast_cosine())
-        .filter(F.col("_fast").isNotNull() & ~F.isnan(F.col("_fast")))
-    )
-    if prereduce:
-        fast = _local_topk_prereduce(fast, k + margin)
-    w = Window.partitionBy("query_id").orderBy(F.desc("_fast"), F.asc("neighbor_id"))
-    cand = fast.withColumn("_r", F.row_number().over(w)).filter(
-        F.col("_r") <= k + margin
-    )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        cosine(
-            F.col("q_vec"),
-            F.col("c_vec"),
-            norm2(F.col("q_vec")),
-            norm2(F.col("c_vec")),
-        ).alias("score"),
-    )
-    return _rank_topk(scored, k)
-
-
-def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Rank by the raw double score (per-engine ulp noise is orders of
-    magnitude below real score gaps, so ranking is stable), but expose
-    the score quantized to 6 dp — coarse enough that ulp-level
-    engine drift (decimal→double conversion, fused vs split rounding)
-    can never reach the exposed digits. The full-precision 9-dp
-    contract is pinned in pytest (tests/test_similarity_exact.py)
-    against an engine-independent Python-decimal reference."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("score").cast("decimal(18,6)").alias("score_q"),
-            # Spark row_number() is int32 but SQL engines (DuckDB/PG)
-            # produce int64 — widen so the exposed schema matches the
-            # ANSI oracle byte-for-byte.
-            F.col("rnk").cast("bigint").alias("rnk"),
-        )
-    )
 
 
 def embedding_near_dups(
@@ -375,40 +196,20 @@ def semantic_contamination(
     )
 
 
-def bucketed_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "label",
-) -> DataFrame:
-    """IVF-style ANN: candidates restricted to the query's coarse
-    bucket (inverted-file partition). Same two-phase scoring as
-    :func:`brute_force_topk`, but the join key includes the bucket —
-    the scan prunes to matching partitions and the pairing is
-    |bucket|-sized, not |corpus|-sized."""
-    q = _side(queries, id_col, vec_col, "query_id", "q", bucket_col)
-    c = _side(embeddings, id_col, vec_col, "neighbor_id", "c", bucket_col)
-    cond = (F.col("q_bucket") == F.col("c_bucket")) & (
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    return _two_phase_topk(q, c, cond, k)
-
-
 # ---------------------------------------------------------------------------
 # Integral exact-ranking tier: cosine top-k with a 100 % integer
 # lineage — zero IEEE double *arithmetic* anywhere (the only
 # double-typed expression is the exact float→double widening cast
 # inside element canonicalization), so the ranking AND every exposed
-# value are bit-identical on any engine, any version.
+# value are bit-identical on any engine, any version. It is the only
+# scoring tier: every top-k and threshold op here ranks or cuts on
+# its key.
 #
-# Why it exists: the double tier above (`brute_force_topk`) ranks by
-# a double score whose last ulps depend on the engine's
+# Why integers: a double score's last ulps depend on the engine's
 # decimal→double cast and sqrt/divide rounding; three graded rounds
-# (r2/r3/r5) showed that even a 6-dp quantize of that score can flip
-# on near-tie rows between Spark and an external oracle. This tier
-# removes the problem class instead of narrowing it: after the
+# (r2/r3/r5) showed that ranking on such a score, even quantized to
+# 6 dp, can flip near-tie rows between Spark and an external oracle.
+# This tier removes the problem class instead of narrowing it: after the
 # parity-proven element canonicalization (float → double →
 # decimal(12,10), identical HALF_UP in Spark and in the DuckDB
 # oracles' llm_queries._DUCK_ELEM_DEC), every
@@ -487,7 +288,10 @@ def _integral_side(
     if bucket_col:
         cols.insert(1, F.col(bucket_col).alias(f"{tag}_bucket"))
     if keep_vec:
-        cols.extend(_vec_nd_cols(vec_col, tag))
+        cols += [
+            F.col(vec_col).alias(f"{tag}_vec"),
+            F.sqrt(dot_fast(F.col(vec_col), F.col(vec_col))).alias(f"{tag}_nd"),
+        ]
     return (
         df.select(*cols)
         .withColumn(f"{tag}_n2_20", idot20(F.col(f"{tag}_ie"), F.col(f"{tag}_ie")))
@@ -640,14 +444,30 @@ def threshold_key(threshold: float) -> int:
     return (t10 * t10) // 10**8
 
 
+# Auto-enable the map-side prereduce once the candidate scan is at
+# least this many partitions wide. The ranking window's shuffle input
+# is |C|·|Q| keyed pairs; the prereduce caps it at partitions·k·|Q|,
+# but costs one Arrow hop over the keyed pairs. At ≥8 scan partitions
+# (≈ a GiB of parquet at default bin sizing, or any at-scale table)
+# the shuffle saving dominates; below that the hop is pure overhead on
+# a shuffle that already fits one exchange.
+PREREDUCE_MIN_PARTITIONS = 8
+
+
 def _local_key_prereduce(scored: DataFrame, k: int) -> DataFrame:
-    """Map-side per-batch top-``k`` per query on the exact integer
-    key, before the global ranking window — same shuffle-shrinking
-    argument as :func:`_local_topk_prereduce`, but no margin is
-    needed: the key IS the final sort key (exact, total order with
-    the id tie-break), so a batch-local cut can never drop a global
-    top-k row. Every column in the pair stream is int64, so the
-    Arrow hop is cheap and the pandas sort is exact."""
+    """Map-side top-``k`` per query within each Arrow batch, on the
+    exact integer key, before the global ranking window.
+
+    The global window shuffles every keyed pair on ``query_id`` —
+    |Q|·|C| rows at brute-force scale. This pass keeps only each
+    batch's top-``k`` per query while provably preserving the result:
+    the key with its id tie-break is a total order and IS the final
+    sort key, so a pair in the global top-``k`` for its query is
+    beaten by < k pairs overall, hence by < k pairs inside its own
+    batch, and no batch-local cut can drop it (the argument
+    TakeOrderedAndProject relies on). Every column in the pair stream
+    is int64, so the Arrow hop is cheap and the pandas sort is
+    exact."""
 
     def _local(batches):
         for pdf in batches:
@@ -663,16 +483,25 @@ def _local_key_prereduce(scored: DataFrame, k: int) -> DataFrame:
 def _integral_topk(
     q: DataFrame, c: DataFrame, cond, k: int, prereduce: bool | None = None
 ) -> DataFrame:
-    """Single-phase exact top-k on the integer key. Unlike
-    :func:`_two_phase_topk` there is no float64 prune + decimal
-    rescore: the integer key is simultaneously the pruning score and
-    the final ranking, so one scoring pass suffices and the analyzed
-    plan contains no double arithmetic at all (pinned by
-    tests/test_float_lineage.py). Exposes the exact integer triple
-    (dot_e9, qnorm2_e9, nnorm2_e9) plus the signed squared-cosine
-    key (score2_e12) — cosine itself is sign(dot_e9)·sqrt(|score2_e12|
-    /10^12), left to the caller per the (num, den) exposure rule
-    (COVERAGE.md): no engine-run float op may mint graded digits."""
+    """Single-phase exact top-k on the integer key: one integer dot
+    per candidate pair (the broadcast query side ``q`` joined to ``c``
+    on ``cond``), ranked by ``score2_e12`` desc with a ``neighbor_id``
+    tie-break. The key is both the only score and the final ranking,
+    so there is no prune-then-rescore margin to get right, and the
+    analyzed plan contains no double arithmetic at all (pinned by
+    tests/test_float_lineage.py).
+
+    ``prereduce`` inserts the map-side per-batch top-k cut of
+    :func:`_local_key_prereduce` before the window (identical
+    results, narrower shuffle). ``None`` auto-enables it when ``c``
+    scans ≥ :data:`PREREDUCE_MIN_PARTITIONS` partitions (the
+    supported-API width probe — no job runs).
+
+    Exposes the exact integer triple (dot_e9, qnorm2_e9, nnorm2_e9)
+    plus the signed squared-cosine key (score2_e12) — cosine itself
+    is sign(dot_e9)·sqrt(|score2_e12|/10^12), left to the caller per
+    the (num, den) exposure rule (COVERAGE.md): no engine-run float
+    op may mint graded digits."""
     if prereduce is None:
         prereduce = c.rdd.getNumPartitions() >= PREREDUCE_MIN_PARTITIONS
     scored = _keyed_pairs(F.broadcast(q).join(c, cond)).select(
@@ -712,10 +541,15 @@ def brute_force_topk_integral(
     prereduce: bool | None = None,
 ) -> DataFrame:
     """Exact cosine top-k with a fully integral, engine-bit-identical
-    lineage — the graded sibling of :func:`brute_force_topk`. Same
-    plan shape (broadcast query side, one corpus pass, optional
-    map-side prereduce, one ranking window); the scoring swaps the
-    double cosine for the exact integer key (see module section)."""
+    lineage: broadcast the (small) query set against the corpus, key
+    every pair, rank on the key (see the integral-tier section).
+
+    One pass over the corpus, no corpus self-join. The per-query
+    ranking window shuffles |corpus| rows per query; ``prereduce``
+    cuts each map task's share of that shuffle to its local
+    per-query top-k first (see :func:`_integral_topk`; default
+    ``None`` auto-enables it on a wide corpus scan, True/False
+    forces it)."""
     q = _integral_side(queries, id_col, vec_col, "query_id", "q")
     c = _integral_side(embeddings, id_col, vec_col, "neighbor_id", "c")
     return _integral_topk(
@@ -731,9 +565,10 @@ def bucketed_topk_integral(
     vec_col: str = "embedding",
     bucket_col: str = "label",
 ) -> DataFrame:
-    """Bucket-pruned ANN with the integral exact-ranking lineage —
-    the graded sibling of :func:`bucketed_topk`: the join key includes
-    the coarse bucket, so the pairing stays |bucket|-sized and at
+    """Bucket-pruned ANN with the integral exact-ranking lineage:
+    candidates are restricted to the query's coarse bucket
+    (inverted-file partition). The join key includes the bucket, so
+    the pairing stays |bucket|-sized, not |corpus|-sized, and at
     100 TB the bucket column is the partition key (scan prunes to
     probed buckets)."""
     q = _integral_side(queries, id_col, vec_col, "query_id", "q", bucket_col)
@@ -746,9 +581,9 @@ def bucketed_topk_integral(
 
 # ---------------------------------------------------------------------------
 # Trained IVF: spherical k-means centroids + multi-probe assignment.
-# The label-keyed bucketed_topk above assumes a precomputed coarse
-# assignment; this is the path that *builds* one when the corpus has
-# no natural bucket column — the standard IVF construction.
+# The label-keyed bucketed_topk_integral above assumes a precomputed
+# coarse assignment; this is the path that *builds* one when the
+# corpus has no natural bucket column — the standard IVF construction.
 # ---------------------------------------------------------------------------
 
 
@@ -882,8 +717,9 @@ def ivf_topk(
 ) -> DataFrame:
     """End-to-end trained-IVF ANN: train centroids on the corpus,
     assign every corpus vector to its cell, probe the query's
-    ``probes`` closest cells, and run the same two-phase exact-rescore
-    top-k as the other search paths inside the probed cells only.
+    ``probes`` closest cells, and rank inside the probed cells only on
+    the same integral key as the other search paths
+    (:func:`_integral_topk`, keyed by ``ivf_bucket``).
 
     With ``probes == n_centroids`` this degrades gracefully to exact
     brute force (every cell probed) — the recall/cost dial is the
@@ -895,24 +731,48 @@ def ivf_topk(
     matrix instead of training — the production shape (train once,
     search many) and what lets the graded query replay a literal
     matrix its DuckDB oracle also carries (``n_centroids``/``iters``
-    are ignored in that case)."""
+    are ignored in that case).
+
+    Output: (query_id, neighbor_id, score_q decimal(18,6), rnk
+    bigint). ``score_q`` is the exact-decimal :func:`cosine` rounded
+    to 6 dp, computed only on the k·|Q| winners by joining them back
+    to their vectors — so ``id_col`` must be a key of both inputs."""
     cents = centroids if centroids is not None else train_ivf_centroids(
         embeddings, n_centroids=n_centroids, iters=iters,
         id_col=id_col, vec_col=vec_col,
     )
-    c = _side(
+    c = _integral_side(
         assign_ivf(embeddings, cents, vec_col=vec_col),
         id_col, vec_col, "neighbor_id", "c", "ivf_bucket",
     )
     q_assigned = assign_ivf(queries, cents, vec_col=vec_col, probes=probes)
-    q = _side(
+    q = _integral_side(
         q_assigned.withColumn("ivf_bucket", F.explode("ivf_bucket")),
         id_col, vec_col, "query_id", "q", "ivf_bucket",
     )
     cond = (F.col("q_bucket") == F.col("c_bucket")) & (
         F.col("query_id") != F.col("neighbor_id")
     )
-    return _two_phase_topk(q, c, cond, k)
+    top = _integral_topk(q, c, cond, k).select("query_id", "neighbor_id", "rnk")
+    q_vec = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+    c_vec = embeddings.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    )
+    q_v, c_v = F.col("q_vec"), F.col("c_vec")
+    return (
+        F.broadcast(top.join(F.broadcast(q_vec), "query_id"))
+        .join(c_vec, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            cosine(q_v, c_v, norm2(q_v), norm2(c_v))
+            .cast("decimal(18,6)")
+            .alias("score_q"),
+            "rnk",
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -985,32 +845,6 @@ def srp_lsh_buckets(
             "bigint"
         )
     return embeddings.select(F.col(id_col), bucket.alias("bucket"))
-
-
-def srp_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_planes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k over SRP-LSH buckets: candidates restricted to the
-    query's hash bucket, then the standard two-phase exact-rescore.
-    Training-free sibling of :func:`ivf_topk` — recall follows the
-    SRP collision probability (1 - theta/pi per plane), dialed by
-    ``n_planes``; fewer planes → bigger buckets → higher recall and
-    cost. Same 100 TB shape as every bucketed path here: the code is
-    the partition key, the pairing is |bucket|-sized."""
-    eb = embeddings.join(
-        srp_lsh_buckets(embeddings, n_planes, dim, id_col, vec_col), id_col
-    )
-    qb = queries.join(
-        srp_lsh_buckets(queries, n_planes, dim, id_col, vec_col), id_col
-    )
-    return bucketed_topk(eb, qb, k=k, id_col=id_col, vec_col=vec_col,
-                         bucket_col="bucket")
 
 
 # ---------------------------------------------------------------------------
@@ -1179,32 +1013,6 @@ def stored_corpus_codes(
         return codes
 
 
-def quantized_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force top-k over int8-quantized vectors: the per-vector
-    scales cancel under cosine, so dots and squared norms are exact
-    int64 on the codes. Ranking and exposure follow the integral
-    discipline via :func:`quantized_topk_coded`: sort key
-    sign(dp)·(dp²·10^12) div (n2q·n2c) with an id tie-break, output
-    schema (query_id, neighbor_id, dot_i, qnorm2_i, nnorm2_i,
-    score2_e12, rnk) — all bigint; cosine is
-    sign(dot_i)·sqrt(|score2_e12|/10^12) client-side.
-
-    Quantization error vs true cosine is bounded by ~2·sqrt(d)/127
-    relative for unit-norm vectors (pytest pins observed recall); at
-    scale this is the memory/bandwidth tier — 4x less shuffle volume
-    than float32 — with the exact decimal path available for rescoring
-    the survivors."""
-    qe = quantize_embeddings(embeddings, id_col, vec_col)
-    qq = quantize_embeddings(queries, id_col, vec_col)
-    return quantized_topk_coded(qe, qq, k, id_col)
-
-
 def quantized_topk_coded(
     corpus_codes: DataFrame,
     query_codes: DataFrame,
@@ -1216,8 +1024,11 @@ def quantized_topk_coded(
     :func:`quantize_embeddings`, materialized once) — the at-scale
     shape: the corpus codes live as a stored int8 table (4x smaller
     scan + shuffle than the float column), and each query batch pays
-    only its own quantization. :func:`quantized_topk` is the
-    one-shot convenience wrapper over this.
+    only its own quantization. A one-shot search passes
+    ``quantize_embeddings(corpus)`` and ``quantize_embeddings(queries)``.
+    Quantization error vs true cosine is bounded by ~2·sqrt(d)/127
+    relative for unit-norm vectors (pytest pins the observed recall
+    against :func:`brute_force_topk_integral`).
 
     Ranking and exposure follow the integral exact-ranking discipline
     (see the module section above): dots and norms are already exact

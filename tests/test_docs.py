@@ -6,7 +6,11 @@ The test parses the FIRST bold claim line of COVERAGE.md for the
 query/oracle counts and compares them to ``queries.REGISTRY``; the
 test count is intentionally looser (a >= floor), because the suite
 grows within a round and pinning it exactly would make every new
-test a two-file edit."""
+test a two-file edit.
+
+The later tests check that every ``file.py::name`` COVERAGE.md cites
+and every ``simple_etl_spark`` name ``examples/*.py`` imports exists,
+so deleting code without fixing its docs fails here."""
 
 from __future__ import annotations
 
@@ -51,3 +55,98 @@ def test_coverage_header_bench_and_test_counts():
     assert int(m.group(1)) == n_bench
     # floor, not equality: the suite only ever grows within a round
     assert int(m.group(2)) >= 1000
+
+
+# ---------------------------------------------------------------------------
+# Docs name real code: a COVERAGE row or an example that points at a
+# deleted or renamed function fails here instead of rotting silently.
+# ---------------------------------------------------------------------------
+
+# `path.py::name` plus any chained ` / `other`` names in the same cell
+_COVERAGE_REF = re.compile(r"`([\w/]+\.py)::([^`]+)`((?:\s*/\s*`[^`]+`)*)")
+
+
+def _defined_names(path: str) -> set[str]:
+    """Every def, class and assigned name anywhere in a Python file."""
+    import ast
+
+    tree = ast.parse(open(path).read(), filename=path)
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names.update(n.id for n in ast.walk(t) if isinstance(n, ast.Name))
+    return names
+
+
+def _resolve(rel: str) -> list[str]:
+    """Files a COVERAGE path names: test paths from the repo root,
+    library paths as a path suffix under ``simple_etl_spark/``."""
+    if rel.startswith("tests/"):
+        p = os.path.join(REPO, rel)
+        return [p] if os.path.isfile(p) else []
+    pkg = os.path.join(REPO, "simple_etl_spark")
+    hits = []
+    for root, _dirs, files in os.walk(pkg):
+        for f in files:
+            p = os.path.join(root, f)
+            if p.endswith(os.sep + rel):
+                hits.append(p)
+    return hits
+
+
+def test_coverage_references_name_real_code():
+    import fnmatch
+
+    text = open(os.path.join(REPO, "COVERAGE.md")).read()
+    refs = []
+    for m in _COVERAGE_REF.finditer(text):
+        chained = re.findall(r"`([^`]+)`", m.group(3))
+        for name in [m.group(2), *chained]:
+            refs.append((m.group(1), name.split("(")[0].strip()))
+    assert len(refs) > 100, "COVERAGE.md reference format changed"
+    missing = []
+    for rel, name in refs:
+        files = _resolve(rel)
+        defined = set().union(*(_defined_names(p) for p in files)) if files else set()
+        if not fnmatch.filter(defined, name):
+            missing.append(f"{rel}::{name}")
+    assert not missing, f"COVERAGE.md names code that does not exist: {missing}"
+
+
+def _is_submodule(pkg: str, name: str) -> bool:
+    import importlib.util
+
+    try:
+        return importlib.util.find_spec(f"{pkg}.{name}") is not None
+    except ModuleNotFoundError:  # ``pkg`` is a module, not a package
+        return False
+
+
+def test_examples_import_real_names():
+    import ast
+    import glob
+    import importlib
+
+    missing = []
+    for path in sorted(glob.glob(os.path.join(REPO, "examples", "*.py"))):
+        tree = ast.parse(open(path).read(), filename=path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "simple_etl_spark"
+            ):
+                mod = importlib.import_module(node.module)
+                missing += [
+                    f"{os.path.basename(path)}: {node.module}.{a.name}"
+                    for a in node.names
+                    if not hasattr(mod, a.name)
+                    and not _is_submodule(node.module, a.name)
+                ]
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith("simple_etl_spark"):
+                        importlib.import_module(a.name)
+    assert not missing, f"examples import names that do not exist: {missing}"

@@ -8,7 +8,7 @@ import pytest
 
 from simple_etl_spark.llm.similarity import (
     assign_ivf,
-    brute_force_topk,
+    brute_force_topk_integral,
     ivf_topk,
     train_ivf_centroids,
 )
@@ -73,11 +73,9 @@ def test_full_probe_equals_brute_force(spark, emb):
     ivf = ivf_topk(
         emb, queries, k=3, n_centroids=4, iters=2, probes=4
     ).collect()
-    bf = brute_force_topk(emb, queries, k=3).collect()
-    key = lambda r: (r["query_id"], r["rnk"])
-    assert sorted(map(tuple, ivf), key=lambda t: (t[0], t[3])) == sorted(
-        map(tuple, bf), key=lambda t: (t[0], t[3])
-    )
+    bf = brute_force_topk_integral(emb, queries, k=3).collect()
+    key = lambda r: (r["query_id"], r["neighbor_id"], r["rnk"])
+    assert sorted(map(key, ivf)) == sorted(map(key, bf))
 
 
 def test_ivf_deterministic_across_runs(spark, emb):
@@ -94,11 +92,12 @@ def test_too_few_vectors_raises(spark, emb):
 
 
 def test_prereduced_brute_force_identical(spark, emb):
-    """The map-side per-batch top-(k+margin) cut must not change the
-    result — only the shuffle width into the ranking window."""
+    """The map-side per-batch top-k cut on the integral key must not
+    change the result — only the shuffle width into the ranking
+    window."""
     queries = emb.filter("vec_id < 5")
-    plain = brute_force_topk(emb, queries, k=4, prereduce=False).collect()
-    pre = brute_force_topk(emb, queries, k=4, prereduce=True).collect()
+    plain = brute_force_topk_integral(emb, queries, k=4, prereduce=False).collect()
+    pre = brute_force_topk_integral(emb, queries, k=4, prereduce=True).collect()
     assert sorted(map(tuple, pre)) == sorted(map(tuple, plain))
 
 
@@ -110,31 +109,9 @@ def test_prereduce_identical_on_wide_corpus(spark, emb):
 
     wide = emb.repartition(PREREDUCE_MIN_PARTITIONS)
     queries = emb.filter("vec_id < 5")
-    plain = brute_force_topk(emb, queries, k=4, prereduce=False).collect()
-    auto = brute_force_topk(wide, queries, k=4).collect()  # auto-engaged
+    plain = brute_force_topk_integral(emb, queries, k=4, prereduce=False).collect()
+    auto = brute_force_topk_integral(wide, queries, k=4).collect()  # auto-engaged
     assert sorted(map(tuple, auto)) == sorted(map(tuple, plain))
-
-
-def test_srp_topk_equals_bucket_restricted_brute_force(spark, emb):
-    """SRP search must return exactly what exact scoring returns when
-    restricted to same-bucket pairs (the bucketing prunes candidates;
-    it must never change scores or ranking within a bucket)."""
-    from pyspark.sql import functions as F
-
-    from simple_etl_spark.llm.similarity import (
-        bucketed_topk,
-        srp_lsh_buckets,
-        srp_topk,
-    )
-
-    queries = emb.filter("vec_id < 5")
-    got = srp_topk(emb, queries, k=3, n_planes=4, dim=64)
-
-    buckets = srp_lsh_buckets(emb, n_planes=4, dim=64)
-    eb = emb.join(buckets, "vec_id")
-    qb = queries.join(buckets, "vec_id")
-    want = bucketed_topk(eb, qb, k=3, bucket_col="bucket")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_srp_buckets_group_duplicates_together(spark, emb):
@@ -230,14 +207,16 @@ def test_assignment_margins_dwarf_float_drift(spark):
 
 
 def test_rescore_margins_and_quantization_boundaries(spark):
-    """Review r9: the graded rescore ranks on a double whose
-    decimal->double cast differs by 1 ulp between DuckDB and Spark
-    (~25% of values), so cross-engine rank/score_q parity rests on
-    score margins. Guard them the way assignment margins are guarded:
-    for every graded query, (a) adjacent candidate scores around the
-    top-3 cut are separated by far more than 1 ulp, and (b) the
-    exposed top-3 scores sit far from a 6-dp rounding midpoint, so a
-    1-ulp disagreement can never flip rnk or score_q."""
+    """The engine ranks llm_ann_ivf on the integral key (cos²
+    truncated at 10^-12), while its DuckDB oracle ranks on a double
+    cosine whose decimal->double cast differs by 1 ulp from Spark's on
+    ~25% of values; score_q is that double rounded to 6 dp on both
+    sides. Cross-engine rank/score_q parity therefore rests on score
+    margins. Guard them the way assignment margins are guarded: for
+    every graded query, (a) adjacent candidate scores around the
+    top-3 cut are separated by far more than the key's truncation or
+    1 ulp, and (b) the exposed top-3 scores sit far from a 6-dp
+    rounding midpoint, so neither can flip rnk or score_q."""
     import os
     from decimal import Decimal
 

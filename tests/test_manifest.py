@@ -62,7 +62,7 @@ def test_prune_is_conservative_and_effective(spark, ztable):
 
 
 def test_prune_empty_interval_returns_zero_rows(spark, ztable):
-    base, _side = ztable
+    base, _ = ztable
     snap = table_path(base)
     assert read_pruned(spark, snap, "y", 10_000, 20_000).count() == 0
 

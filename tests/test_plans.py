@@ -255,26 +255,26 @@ def test_ivf_search_is_broadcast_equijoin_on_cell(spark, sf_dir):
 
 
 def test_prereduce_auto_engages_by_scan_width(spark, sf_dir):
-    """brute_force_topk's map-side prereduce must turn itself on once
-    the corpus scan is >= PREREDUCE_MIN_PARTITIONS wide (the window's
-    shuffle input then shrinks from |Q|*|C| to km*|Q| per batch), and
-    stay out of the plan on a narrow scan where the Arrow hop is pure
-    overhead."""
+    """brute_force_topk_integral's map-side prereduce must turn itself
+    on once the corpus scan is >= PREREDUCE_MIN_PARTITIONS wide (the
+    window's shuffle input then shrinks from |Q|*|C| to k*|Q| per
+    batch), and stay out of the plan on a narrow scan where the Arrow
+    hop is pure overhead."""
     from simple_etl_spark.engine import Catalog
     from simple_etl_spark.llm.similarity import (
         PREREDUCE_MIN_PARTITIONS,
-        brute_force_topk,
+        brute_force_topk_integral,
     )
 
     emb = Catalog(spark, sf_dir)["embeddings"]
     queries = emb.filter("vec_id < 3")
 
     wide = emb.repartition(PREREDUCE_MIN_PARTITIONS)
-    engaged = _plan(brute_force_topk(wide, queries, k=5))
+    engaged = _plan(brute_force_topk_integral(wide, queries, k=5))
     assert "MapInPandas" in engaged
 
     narrow = emb.coalesce(1)
-    off = _plan(brute_force_topk(narrow, queries, k=5))
+    off = _plan(brute_force_topk_integral(narrow, queries, k=5))
     assert "MapInPandas" not in off
 
 
@@ -425,10 +425,17 @@ def test_linkage_blocking_is_single_scan(cat):
 def test_quantized_topk_broadcasts_queries(cat):
     from pyspark.sql import functions as F2
 
-    from simple_etl_spark.llm.similarity import quantized_topk
+    from simple_etl_spark.llm.similarity import (
+        quantize_embeddings,
+        quantized_topk_coded,
+    )
 
     emb = cat["embeddings"]
-    plan = _plan(quantized_topk(emb, emb.filter(F2.col("vec_id") < 3), k=5))
+    plan = _plan(quantized_topk_coded(
+        quantize_embeddings(emb),
+        quantize_embeddings(emb.filter(F2.col("vec_id") < 3)),
+        k=5,
+    ))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 

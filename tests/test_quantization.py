@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 
 from simple_etl_spark.engine import Catalog
 from simple_etl_spark.llm.similarity import (
-    brute_force_topk,
+    brute_force_topk_integral,
     quantize_embeddings,
-    quantized_topk,
+    quantized_topk_coded,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -39,7 +39,8 @@ def test_zero_vector_never_emits(spark):
         [(1, [0.0, 0.0]), (2, [1.0, 0.0]), (3, [0.9, 0.1])],
         "vec_id bigint, embedding array<double>",
     )
-    out = quantized_topk(df, df, k=2).collect()
+    codes = quantize_embeddings(df)
+    out = quantized_topk_coded(codes, codes, k=2).collect()
     ids = {r["query_id"] for r in out} | {r["neighbor_id"] for r in out}
     assert 1 not in ids
 
@@ -50,11 +51,13 @@ def test_recall_vs_exact_on_real_embeddings(spark):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r["query_id"], r["neighbor_id"])
-        for r in brute_force_topk(emb, queries, k=5).collect()
+        for r in brute_force_topk_integral(emb, queries, k=5).collect()
     }
     quant = {
         (r["query_id"], r["neighbor_id"])
-        for r in quantized_topk(emb, queries, k=5).collect()
+        for r in quantized_topk_coded(
+            quantize_embeddings(emb), quantize_embeddings(queries), k=5
+        ).collect()
     }
     # int8 on 64-dim embeddings: expect near-perfect top-5 agreement
     recall = len(exact & quant) / len(exact)
@@ -65,39 +68,23 @@ def test_score_close_to_exact(spark):
     cat = Catalog(spark, SF_DIR)
     emb = cat["embeddings"]
     queries = emb.filter(F.col("vec_id") == 0)
+    # both tiers expose the integral key: cosine is
+    # sign(dot)·sqrt(|score2_e12|/10^12)
+    def cos(dot, key):
+        return (-1.0 if dot < 0 else 1.0) * math.sqrt(abs(key) / 1e12)
+
     exact = {
-        r["neighbor_id"]: float(r["score_q"])
-        for r in brute_force_topk(emb, queries, k=3).collect()
+        r["neighbor_id"]: cos(r["dot_e9"], r["score2_e12"])
+        for r in brute_force_topk_integral(emb, queries, k=3).collect()
     }
-    # quantized tier exposes the integral key: cosine is
-    # sign(dot_i)·sqrt(|score2_e12|/10^12)
     quant = {
-        r["neighbor_id"]: (
-            (-1.0 if r["dot_i"] < 0 else 1.0)
-            * math.sqrt(abs(r["score2_e12"]) / 1e12)
-        )
-        for r in quantized_topk(emb, queries, k=3).collect()
+        r["neighbor_id"]: cos(r["dot_i"], r["score2_e12"])
+        for r in quantized_topk_coded(
+            quantize_embeddings(emb), quantize_embeddings(queries), k=3
+        ).collect()
     }
     for nid in exact.keys() & quant.keys():
         assert abs(exact[nid] - quant[nid]) < 0.05
-
-
-def test_coded_path_equals_end_to_end(spark):
-    from simple_etl_spark.llm.similarity import (
-        quantize_embeddings,
-        quantized_topk_coded,
-    )
-
-    cat = Catalog(spark, SF_DIR)
-    emb = cat["embeddings"]
-    queries = emb.filter(F.col("vec_id") < 3)
-    direct = quantized_topk(emb, queries, k=4).collect()
-    coded = quantized_topk_coded(
-        quantize_embeddings(emb), quantize_embeddings(queries), k=4
-    ).collect()
-    assert sorted(map(tuple, direct), key=lambda t: (t[0], t[3])) == sorted(
-        map(tuple, coded), key=lambda t: (t[0], t[3])
-    )
 
 
 def test_label_outliers_find_planted_mislabel(spark):

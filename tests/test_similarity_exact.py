@@ -20,7 +20,7 @@ from decimal import Decimal, ROUND_HALF_UP
 import pytest
 from pyspark.sql import functions as F
 
-from simple_etl_spark.llm.similarity import brute_force_topk, cosine, norm2
+from simple_etl_spark.llm.similarity import cosine, ivf_topk, norm2
 
 _Q10 = Decimal(1).scaleb(-10)  # element quantum: decimal(12,10)
 
@@ -75,8 +75,13 @@ def test_exact_cosine_matches_decimal_reference_to_9dp(spark, vectors):
 
 
 def test_exposed_score_q_is_reference_rounded_to_6dp(spark, sf_dir, vectors):
+    """ivf_topk exposes score_q; probing every cell makes it exact
+    search, so every winner's score_q is checked."""
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    out = brute_force_topk(emb, emb.filter(F.col("vec_id") < 3), k=5).collect()
+    out = ivf_topk(
+        emb, emb.filter(F.col("vec_id") < 3), k=5,
+        n_centroids=4, iters=2, probes=4,
+    ).collect()
     assert len(out) == 15
     q6 = Decimal(1).scaleb(-6)
     for row in out:
@@ -127,16 +132,24 @@ def test_integral_tier_reconstructs_reference_cosine(spark, sf_dir, vectors):
 def test_integral_tier_ranking_matches_double_tier(spark, sf_dir):
     """The integral key is a strictly monotone transform of cosine, so
     on data with no sub-1e-9 score ties the (query, neighbor, rnk)
-    triples must coincide with the double tier's ranking exactly."""
+    triples must coincide exactly with the ranking by the
+    Python-decimal reference cosine (score desc, neighbor id asc)."""
     from simple_etl_spark.llm.similarity import brute_force_topk_integral
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     q = emb.filter(F.col("vec_id") < 3)
     new = {(r["query_id"], r["neighbor_id"], r["rnk"])
            for r in brute_force_topk_integral(emb, q, k=5).collect()}
-    old = {(r["query_id"], r["neighbor_id"], int(r["rnk"]))
-           for r in brute_force_topk(emb, q, k=5).collect()}
-    assert new == old
+    list_embedding(emb, 0)  # fill the cache with the whole corpus
+    ref = set()
+    for qid in range(3):
+        scored = sorted(
+            (-_ref_cosine(_EMB_CACHE[qid], vec), nid)
+            for nid, vec in _EMB_CACHE.items()
+            if nid != qid and any(vec)
+        )
+        ref |= {(qid, nid, rnk) for rnk, (_, nid) in enumerate(scored[:5], 1)}
+    assert new == ref
 
 
 def test_threshold_key_rejects_nonpositive_threshold():

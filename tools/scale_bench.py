@@ -143,7 +143,7 @@ def main() -> None:
                 entry["queries"][name] = None
                 continue
             # build time matters for the iterative builders
-            # (dedup_clusters' label propagation, quantized_topk's
+            # (dedup_clusters' label propagation, llm_quantized_topk's
             # store resolution run DURING construction); for lazy
             # builders it is plan-assembly milliseconds
             t0 = time.perf_counter()
