@@ -6,6 +6,19 @@ configuration — AQE on (runtime skew-join + partition coalescing),
 dynamic partition overwrite for the merge primitive, broadcast
 threshold left to Spark, UTC session time so event-time semantics are
 timezone-stable across engines and executors.
+
+Generated code is compiled once per session, not once per request:
+:func:`get_spark` sizes Spark's codegen class cache
+(:data:`CODEGEN_CACHE_ENTRIES`) to the engine's measured working set,
+2,044 classes for the whole registry at sf0.001. Spark's default cap
+of 100, a segmented LRU, cannot hold even one query_mix cycle's or
+one bench.py round's classes, so it recompiled part of them on every
+repeat.
+The cap is a static conf, read once per JVM when the first class is
+compiled, so it applies only to sessions that :func:`get_spark`
+built. A session built elsewhere (a caller's own
+``SparkSession.builder`` handed to ``__spark_entry__``) keeps Spark's
+default, and :func:`ensure_runtime_confs` cannot change that.
 """
 
 from __future__ import annotations
@@ -65,11 +78,32 @@ CLUSTER_POSTURE = {
     "spark.executor.decommission.forceKillTimeout": "120s",
 }
 
+# Entries in Spark's generated-class cache (static conf
+# spark.sql.codegen.cache.maxEntries, Spark default 100). The cache is
+# a segmented Guava LRU, so it starts evicting before it holds 100
+# classes, and the engine's working set is far larger. Measured with
+# observability.codegen_stats, 4 cores, seed 1:
+#   - query_mix's six views: after warm-up, a cycle at the default cap
+#     compiles 77-81 classes and loads ~148 new JVM classes, none
+#     unloaded (Metaspace grows ~1 MB per cycle). At 4096 a cycle
+#     compiles 0 and loads ~7.
+#   - bench.py's 10 headline queries (sf0.01) need 86 classes. Rounds
+#     alternating serial and concurrent submission recompile 4-5 of
+#     them every round at the default, 0 at 4096.
+#   - the whole registry (174 batch queries, sf0.001, one opt_sweep
+#     pass) compiles 2,044 distinct classes at 4096 and 3,062 at the
+#     default.
+# 4096 holds the whole registry with room for the segments.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(app_name: str = "simple-etl-spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession sized for the local harness.
 
     On a real cluster the same confs apply; only master/memory differ.
+    The codegen cache cap (:data:`CODEGEN_CACHE_ENTRIES`) is static: it
+    holds only when this call starts the JVM, not when ``getOrCreate``
+    returns a session something else built.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -92,6 +126,7 @@ def get_spark(app_name: str = "simple-etl-spark", cpus: int | None = None) -> Sp
         # messages, never the error itself. Session-build-time conf:
         # PySpark caches the flag per process at first DataFrame call.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in _RUNTIME_CONFS.items():
         builder = builder.config(k, v)

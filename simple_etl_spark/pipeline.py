@@ -38,7 +38,13 @@ from simple_etl_spark.sources.http_source import (
     fetch_contents,
 )
 from simple_etl_spark.sources.kafka import to_kafka_frame
-from simple_etl_spark.sources.table_store import read_table, table_rows, write_table
+from simple_etl_spark.sources.table_store import (
+    current_version,
+    read_table,
+    source_version,
+    table_rows,
+    write_table,
+)
 
 
 def _transport_roundtrip(raw: DataFrame) -> DataFrame:
@@ -174,6 +180,9 @@ def run_streaming_pipeline(
     drains (availableNow when ``trigger`` is None) the gold snapshot
     and search index are refreshed and the reference's stats dict is
     returned, its counts read from the committed snapshots' manifests.
+    The refresh is skipped for each of the two whose manifest already
+    records the current silver version: a drain with no new input
+    commits nothing.
     With a processing-time ``trigger`` the query runs until
     externally stopped and the caller refreshes gold on its own
     cadence (the reference's */15 min view refresh).
@@ -188,6 +197,7 @@ def run_streaming_pipeline(
     bronze_path = os.path.join(warehouse, "bronze")
     silver_path = os.path.join(warehouse, "silver")
     gold_path = os.path.join(warehouse, "gold")
+    index_path = os.path.join(warehouse, "search_index")
 
     query = run_stream(
         stream_df,
@@ -203,9 +213,16 @@ def run_streaming_pipeline(
         return {"query": query}
     query.awaitTermination(timeout_sec)
 
-    write_table(gold_view(read_table(spark, silver_path)), gold_path)
-    gold = read_table(spark, gold_path)
-    write_table(build_search_index(gold), os.path.join(warehouse, "search_index"))
+    # gold and the index record the silver version they were derived
+    # from, so a drain that merged nothing rewrites neither, and one
+    # whose refresh died after the silver commit redoes it next time
+    silver_v = current_version(silver_path)
+    if source_version(gold_path) != silver_v:
+        write_table(gold_view(read_table(spark, silver_path)), gold_path,
+                    source_version=silver_v)
+    if source_version(index_path) != silver_v:
+        write_table(build_search_index(read_table(spark, gold_path)),
+                    index_path, source_version=silver_v)
 
     return {
         "bronze_saved": table_rows(spark, bronze_path),

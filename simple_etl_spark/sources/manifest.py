@@ -59,7 +59,7 @@ def _nullable(dtype):
     return dtype
 
 
-def write_manifest(snapshot_path: str) -> dict:
+def write_manifest(snapshot_path: str, source_version: int | None = None) -> dict:
     """Scan every parquet file's footer once and persist per-file
     column min/max to ``<snapshot>/_manifest.json``. Runs at commit /
     compaction time (the write already paid the I/O), never at query
@@ -70,7 +70,9 @@ def write_manifest(snapshot_path: str) -> dict:
     same Spark schema and no file sits under a Hive partition
     directory: partition column types come from Spark's inference over
     the directory names, which the footers cannot vouch for, so a
-    partitioned snapshot keeps inferring.
+    partitioned snapshot keeps inferring. ``source_version``, when
+    given, is recorded as is: the version of the table this snapshot
+    was derived from.
 
     At cluster scale this is a distributed pass (footers read by
     executors, stats reduced to the driver); at manifest sizes of one
@@ -139,6 +141,8 @@ def write_manifest(snapshot_path: str) -> dict:
             cols.pop(name, None)
         files[entry] = {"columns": cols, "rows": md.num_rows}
     manifest = {"version": 1, "files": files}
+    if source_version is not None:
+        manifest["source_version"] = source_version
     if (len(schemas) == 1 and None not in schemas
             and not any(os.path.dirname(e) for e in relpaths)):
         manifest["schema"] = _nullable(json.loads(schemas.pop()))

@@ -21,6 +21,11 @@ manifest instead of a scan. A snapshot whose manifest (or its schema)
 is missing — a Hive-partitioned one, or one written before manifests
 carried schemas — is inferred and counted by Spark as before. A
 manifest that cannot be written aborts the commit.
+
+A derived table can record in its manifest the version of the table it
+was derived from (``source_version``, read back by
+:func:`source_version`), so a refresh can tell whether its source has
+moved since without reading any data.
 """
 
 from __future__ import annotations
@@ -194,6 +199,7 @@ def write_table(
     base: str,
     partition_by: list[str] | None = None,
     lock_timeout: float = 120.0,
+    source_version: int | None = None,
 ) -> str:
     """Write a new snapshot and swap the pointer (commit point).
 
@@ -202,14 +208,27 @@ def write_table(
     complete snapshot or the new one, never a half-written mix.
     Concurrent writers serialize on :func:`commit_lock` (held across
     version-read → write → swap, so no two commits can claim the same
-    ``v{N}``); readers never take the lock.
+    ``v{N}``); readers never take the lock. ``source_version``, when
+    given, is sealed into the snapshot's manifest with the rest of it
+    (see :func:`source_version`).
     """
     with commit_lock(base, timeout=lock_timeout):
-        return commit_snapshot(df, base, partition_by)
+        return commit_snapshot(df, base, partition_by, source_version)
+
+
+def source_version(base: str) -> int | None:
+    """The source version the current snapshot recorded at commit, or
+    None when the table was never committed or recorded none."""
+    path = table_path(base)
+    manifest = load_manifest(path) if path else None
+    return manifest.get("source_version") if manifest else None
 
 
 def commit_snapshot(
-    df: DataFrame, base: str, partition_by: list[str] | None = None
+    df: DataFrame,
+    base: str,
+    partition_by: list[str] | None = None,
+    source_version: int | None = None,
 ) -> str:
     """The unlocked commit body: write snapshot v{N+1}, swap pointer.
 
@@ -226,11 +245,11 @@ def commit_snapshot(
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(path)
-    _commit(base, v)
+    _commit(base, v, source_version)
     return path
 
 
-def _commit(base: str, v: int) -> None:
+def _commit(base: str, v: int, source_version: int | None = None) -> None:
     """Seal snapshot ``v{v}`` and make it current. Shared by every
     committing path so the protocol has exactly one implementation.
 
@@ -242,7 +261,7 @@ def _commit(base: str, v: int) -> None:
     atomically (POSIX os.replace). A manifest error propagates before
     the swap, so the commit aborts and the table stays at its prior
     version; a retried commit rewrites the same ``v{v}``."""
-    write_manifest(os.path.join(base, f"v{v}"))
+    write_manifest(os.path.join(base, f"v{v}"), source_version)
     tmp = _pointer_file(base) + ".tmp"
     with open(tmp, "w") as fh:
         fh.write(str(v))

@@ -73,3 +73,47 @@ def test_cluster_posture_carries_decommission_knobs():
     assert CLUSTER_POSTURE[
         "spark.executor.decommission.forceKillTimeout"
     ].rstrip("s").isdigit()
+
+
+def test_get_spark_session_carries_the_codegen_cache_cap(spark):
+    from simple_etl_spark.engine import CODEGEN_CACHE_ENTRIES
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_codegen_stats_keys(spark):
+    from simple_etl_spark.observability import codegen_stats
+
+    before = codegen_stats(spark)
+    assert set(before) == {"compiles", "compile_ms_mean", "classes_loaded"}
+    assert isinstance(before["compiles"], int)
+    assert isinstance(before["classes_loaded"], int)
+    assert before["compile_ms_mean"] >= 0
+    spark.range(7).selectExpr("sum(id * 3 + 11) AS s").collect()
+    after = codegen_stats(spark)
+    assert after["compiles"] >= before["compiles"]
+    assert after["classes_loaded"] >= before["classes_loaded"]
+
+
+def test_query_mix_repeat_compiles_no_classes(spark, sf_dir):
+    """The six query_mix views need more generated classes than Spark's
+    default cache (100 entries, segmented LRU) keeps, so at the default
+    every cycle recompiled part of them (109 classes in this session);
+    the engine's cap holds them, so a second cycle compiles nothing."""
+    from perfbench.workloads import QUERY_MIX
+    from simple_etl_spark.observability import codegen_stats
+    from simple_etl_spark.queries import queries
+
+    fns = queries()
+
+    def cycle():
+        for q in QUERY_MIX:
+            fns[q](spark, sf_dir).collect()
+
+    cycle()
+    before = codegen_stats(spark)
+    cycle()
+    after = codegen_stats(spark)
+    assert after["compiles"] - before["compiles"] == 0

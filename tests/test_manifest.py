@@ -242,7 +242,7 @@ def test_manifest_error_aborts_the_commit(spark, tmp_path, monkeypatch):
     base = str(tmp_path / "abort")
     write_table(spark.range(5).select(F.col("id").alias("v")), base)
 
-    def broken(path):
+    def broken(path, source_version=None):
         raise OSError("disk full")
 
     monkeypatch.setattr(table_store, "write_manifest", broken)

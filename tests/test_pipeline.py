@@ -539,7 +539,9 @@ def _jobs_between(spark, body) -> int:
 DRAIN_JOBS = 9
 
 
-def test_streaming_drain_job_budget_and_idle_drain(spark, tmp_path):
+def _feed_and_drain(spark, tmp_path):
+    """A parquet feed directory and a drain of it into one warehouse:
+    returns (warehouse, publish(rows), drain())."""
     from simple_etl_spark.pipeline import run_streaming_pipeline
 
     wh = str(tmp_path / "swh")
@@ -554,6 +556,11 @@ def test_streaming_drain_job_budget_and_idle_drain(spark, tmp_path):
         stream = spark.readStream.schema(STREAM_SCHEMA).parquet(src)
         return run_streaming_pipeline(spark, stream, wh, checkpoint=ckpt)
 
+    return wh, publish, drain
+
+
+def test_streaming_drain_job_budget_and_idle_drain(spark, tmp_path):
+    wh, publish, drain = _feed_and_drain(spark, tmp_path)
     publish(_feed_rows(8, 6))
     assert drain() == {"bronze_saved": 6, "silver_processed": 6, "gold_processed": 6}
 
@@ -569,12 +576,58 @@ def test_streaming_drain_job_budget_and_idle_drain(spark, tmp_path):
     assert sorted(r["content"][:18] for r in silver.collect()) == (
         ["Konten uji versi 8"] * 3 + ["Konten uji versi 9"] * 5)
 
-    # a drain with no new input commits no silver snapshot and leaves
-    # gold and the tally as they were
-    silver_v = current_version(f"{wh}/silver")
+    # a drain with no new input commits no snapshot at all: silver,
+    # gold and the search index keep their versions and rows, and the
+    # tally is as it was
+    versions = {t: current_version(f"{wh}/{t}")
+                for t in ("silver", "gold", "search_index")}
     gold_rows = sorted(map(tuple, read_table(spark, f"{wh}/gold").collect()))
     silver_rows = sorted(map(tuple, silver.collect()))
     assert drain() == tallies[0]
-    assert current_version(f"{wh}/silver") == silver_v
+    assert {t: current_version(f"{wh}/{t}") for t in versions} == versions
     assert sorted(map(tuple, read_table(spark, f"{wh}/silver").collect())) == silver_rows
     assert sorted(map(tuple, read_table(spark, f"{wh}/gold").collect())) == gold_rows
+
+
+def test_streaming_drain_rebuilds_gold_after_a_failed_refresh(
+        spark, tmp_path, monkeypatch):
+    """Silver commits, then the gold write dies: the next drain, with no
+    new input, must still rebuild gold and the search index from the
+    silver the failed drain committed."""
+    from simple_etl_spark import pipeline
+    from simple_etl_spark.sources.table_store import source_version
+
+    wh, publish, drain = _feed_and_drain(spark, tmp_path)
+    publish(_feed_rows(8, 4))
+    assert drain() == {"bronze_saved": 4, "silver_processed": 4, "gold_processed": 4}
+    gold_v = current_version(f"{wh}/gold")
+    index_v = current_version(f"{wh}/search_index")
+
+    real_write = pipeline.write_table
+    failures = []
+
+    def gold_write_dies_once(df, base, *args, **kwargs):
+        if base == f"{wh}/gold" and not failures:
+            failures.append(base)
+            raise OSError("gold write died")
+        return real_write(df, base, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_table", gold_write_dies_once)
+    publish(_feed_rows(9, 6)[2:])  # 2 updated articles, 2 new ones
+    with pytest.raises(OSError, match="gold write died"):
+        drain()
+    silver_v = current_version(f"{wh}/silver")
+    assert current_version(f"{wh}/gold") == gold_v
+    assert source_version(f"{wh}/gold") != silver_v
+
+    assert drain() == {"bronze_saved": 6, "silver_processed": 6, "gold_processed": 6}
+    assert current_version(f"{wh}/silver") == silver_v
+    assert current_version(f"{wh}/gold") == gold_v + 1
+    assert current_version(f"{wh}/search_index") == index_v + 1
+    assert source_version(f"{wh}/gold") == silver_v
+    assert source_version(f"{wh}/search_index") == silver_v
+    gold = read_table(spark, f"{wh}/gold")
+    assert sorted(r["content"][:18] for r in gold.collect()) == (
+        ["Konten uji versi 8"] * 2 + ["Konten uji versi 9"] * 4)
+    index = read_table(spark, f"{wh}/search_index")
+    assert {r["doc"] for r in index.collect()} == {r["id"] for r in gold.collect()}

@@ -6,8 +6,9 @@ through the noop sink (full computation, no driver collect — guide
 and records its shape markers as ``planinfo.plan_summary`` counts them
 (exchanges, join strategies, aggregates, Python/Arrow boundary nodes;
 tree nodes only, each counted once). Output: one JSON with the
-session warm-up seconds (``warmup_s``) and, under ``queries``,
-per-query seconds + marker counts; plus optional per-query plan files
+session warm-up seconds (``warmup_s``), the compiled class total
+(``codegen_classes``) and, under ``queries``, per-query seconds,
+compile counts and marker counts; plus optional per-query plan files
 for plans/r14/.
 
 Session warm-up (first parquet listing, JIT, the first schema
@@ -19,6 +20,13 @@ Build-time cost is measured separately from execution: a query whose
 constructor runs Spark jobs (collect of a skew profile, a sampled
 threshold) pays that once per plan build, and that cost must be
 visible, not folded into the steady-state number.
+
+The code-generation layer is counted from the JVM's own counters
+(``observability.codegen_stats``): each row's ``codegen_compiles`` is
+the number of classes Janino compiled across the query's build and
+first execution, and the top-level ``codegen_classes`` is their sum,
+the registry's compiled working set under the session's codegen
+cache. A row of 0 means every class it needed was still cached.
 
 Usage:
   python tools/opt_sweep.py --out /tmp/opt_sweep.json \
@@ -56,6 +64,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from simple_etl_spark.engine import get_spark, tune_for_input
+    from simple_etl_spark.observability import codegen_stats
     from simple_etl_spark.planinfo import plan_summary, plan_text
     from simple_etl_spark import queries as q
 
@@ -92,6 +101,7 @@ def main() -> None:
         spark.sparkContext.setJobDescription(f"opt_sweep: {name}")
         row: dict = {}
         try:
+            compiled = codegen_stats(spark)["compiles"]
             t0 = time.perf_counter()
             df = fns[name](spark, args.dir)
             row["build_s"] = round(time.perf_counter() - t0, 3)
@@ -106,6 +116,8 @@ def main() -> None:
                     fh.write(plan_text(df))
             # warm-up (codegen, listing) then timed reps
             df.write.format("noop").mode("overwrite").save()
+            row["codegen_compiles"] = (
+                codegen_stats(spark)["compiles"] - compiled)
             best = 9e9
             for _ in range(args.reps):
                 t0 = time.perf_counter()
@@ -118,15 +130,17 @@ def main() -> None:
         done = row.get("exec_s", row.get("err", "?"))
         print(f"{name}: {done}", flush=True)
 
+    classes = sum(r.get("codegen_compiles", 0) for r in results.values())
     with open(args.out, "w") as fh:
-        json.dump({"warmup_s": warmup_s, "queries": results}, fh,
-                  indent=1, sort_keys=True)
+        json.dump({"warmup_s": warmup_s, "codegen_classes": classes,
+                   "queries": results}, fh, indent=1, sort_keys=True)
     total = sum(r.get("exec_s", 0) for r in results.values())
     builds = sum(r.get("build_s", 0) for r in results.values())
     errs = [n for n, r in results.items() if "err" in r]
     print(
         f"swept {len(results)} queries: warmup={warmup_s:.1f}s "
-        f"exec_total={total:.1f}s build_total={builds:.1f}s errors={errs}"
+        f"exec_total={total:.1f}s build_total={builds:.1f}s "
+        f"codegen_classes={classes} errors={errs}"
     )
     spark.stop()
 
