@@ -139,14 +139,6 @@ def bm25_rank(
     idf = ln(1 + (N - df + 0.5)/(df + 0.5)) times the saturated
     tf·(k1+1)/(tf + k1·(1 - b + b·dl/avgdl)) term.
 
-    Scale shape: the posting list is built once (one shuffle of
-    (token, doc) partials); per-doc length and the corpus N/avgdl are
-    aggregates of that same relation; the query-term filter is a
-    pushed-down IN over the broadcast literal list, so the scored
-    relation is |matching postings| — never the corpus — and the
-    per-token doc_freq join is a broadcast of ≤|terms| rows. The final
-    top-n is TakeOrderedAndProject.
-
     Determinism contract: every per-(doc, token) contribution is one
     straight-line double expression (identical parenthesization in the
     SQL oracle) quantized to 6 dp, then summed EXACTLY in decimal —
@@ -154,22 +146,23 @@ def bm25_rank(
     cannot reach the exposed score or the ranking, which orders by the
     quantized score with an id tie-break.
 
-    r14 shape: the query's term list is a literal handful, so no
-    (token, doc) posting relation is ever materialized — the analyzed
-    token stream stays an ARRAY on its document row, ``dl`` and each
-    term's ``tf`` are array expressions in one projection, and the
-    corpus stats (n_docs, avgdl, per-term document frequencies) come
-    out of ONE global aggregate of that projection. The r13 shape
-    rebuilt the posting pipeline four times (hits, dfreq, doclen,
-    stats — four corpus scans, two corpus-wide shuffles keyed by
-    (token, doc) and doc); this computes identical values in two
-    scans with no corpus-sized shuffle at all. Per-term contributions
-    of tf=0 terms are exactly 0.000000 in decimal and excluded by the
-    any-hit filter, so the summed score matches the posting shape
-    bit-for-bit. Precondition (guarded by the oracle parity suite):
-    ``id_col`` is unique — duplicate-id rows merged into one virtual
-    document by the old posting groupBy belong to the posting-index
-    tier (:func:`build_search_index`), not ranked retrieval."""
+    Scale shape: the query's term list is a literal handful, so no
+    (token, doc) posting relation is ever materialized. The analyzed
+    token stream stays an ARRAY on its document row, and ``dl`` and
+    each term's ``tf`` are array expressions in one projection. ONE
+    global aggregate of that projection yields the corpus stats
+    (n_docs, avgdl, per-term document frequencies) together with the
+    list of matching documents, which is inlined and scored in place.
+    The corpus is therefore scanned and tokenized once, with no join
+    and no corpus-sized shuffle; the aggregate's memory grows with the
+    matching documents, not the corpus. The final top-n is
+    TakeOrderedAndProject. Per-term contributions of tf=0 terms are
+    exactly 0.000000 in decimal, so the summed score matches the
+    posting-relation formulation (the SQL oracle) bit-for-bit.
+    Precondition (guarded by the oracle parity suite): ``id_col`` is
+    unique — duplicate-id rows merged into one virtual document by a
+    posting groupBy belong to the posting-index tier
+    (:func:`build_search_index`), not ranked retrieval."""
     terms = sorted({t.lower() for t in terms})
     toks = df.select(
         F.col(id_col).alias("doc"),
@@ -190,23 +183,25 @@ def bm25_rank(
             for i, term in enumerate(terms)
         ],
     ).filter(F.col("dl") >= 1)
-    # N, avgdl and every term's document frequency: ONE pass of exact
-    # integer aggregates (one double division) — bit-identical on any
-    # engine to the posting-relation formulation
+    # N, avgdl, every term's document frequency and the hit rows: ONE
+    # pass of exact integer aggregates (one double division) —
+    # bit-identical on any engine to the posting-relation formulation.
+    # collect_list skips the NULL of a non-matching document, so the
+    # aggregate holds the matching documents only, never the corpus.
+    tfs = [F.col(f"_tf{i}") for i in range(len(terms))]
+    any_hit = (F.greatest(*tfs) if len(tfs) > 1 else tfs[0]) > 0
     stats = toks.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-        *[
-            F.count_if(F.col(f"_tf{i}") > 0).alias(f"_df{i}")
-            for i in range(len(terms))
-        ],
+        *[F.count_if(tf > 0).alias(f"_df{i}") for i, tf in enumerate(tfs)],
+        F.collect_list(F.when(any_hit, F.struct("doc", "dl", *tfs))).alias("_hits"),
     )
-    hits = toks.filter(
-        F.greatest(*[F.col(f"_tf{i}") for i in range(len(terms))]) > 0
-        if len(terms) > 1
-        else F.col("_tf0") > 0
+    scored = stats.select(
+        "n_docs",
+        "avgdl",
+        *[f"_df{i}" for i in range(len(terms))],
+        F.inline("_hits"),
     )
-    scored = hits.crossJoin(F.broadcast(stats))
 
     def _contrib(i: int) -> Column:
         tf = F.col(f"_tf{i}")

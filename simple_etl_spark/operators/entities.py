@@ -2,9 +2,16 @@
 
 The reference's NER stage (`processor/ner.py:51-199`) runs a
 transformer model over article text and emits one row per entity — a
-table-generating UDF. The Spark-native shape is ``mapInPandas``: the
-model loads once per executor (broadcast-by-initialization), batches
-arrive as Arrow record batches, and output explodes to entity rows.
+table-generating UDF. Its Spark shape has two lanes:
+
+- **Column lane.** An extractor that is plain arithmetic over the words
+  of the text offers a Column form (its ``column_form`` attribute): the
+  same rows written as ``explode``/``split``/``instr`` expressions. The
+  rows never leave the JVM, and the plan has no Python node.
+  :func:`deterministic_extractor` is such an extractor.
+- **mapInPandas lane.** Every other extractor is a Python callable: the
+  model loads once per executor (broadcast-by-initialization), batches
+  arrive as Arrow record batches, and output explodes to entity rows.
 
 The extractor is *injectable* (SURVEY §7 hard-part (c)): tests and the
 correctness oracle use :func:`deterministic_extractor`, a pure
@@ -69,6 +76,40 @@ def deterministic_extractor(text: str) -> list[tuple[str, str, float, int, int]]
         start = text.find(word)
         out.append((word, etype, conf, start, start + len(word)))
     return out
+
+
+def deterministic_columns(articles: DataFrame, text_col: str) -> DataFrame:
+    """Column form of :func:`deterministic_extractor`: the same entity
+    rows (all of :data:`ENTITY_SCHEMA`, before the confidence filter)
+    as JVM expressions. ``length`` counts code points like ``len``,
+    ``ascii`` returns the first code point like ``ord``, and ``instr``
+    finds the first occurrence like ``str.find``, so the two forms agree
+    on non-ASCII and astral letters and on a word that first occurs
+    inside an earlier one. A NULL text explodes to no rows."""
+    word = F.col("entity_text")
+    n = F.length(word)
+    etype = F.when(n % 3 == 0, _TYPES[0]).when(n % 3 == 1, _TYPES[1]).otherwise(_TYPES[2])
+    start = F.instr(F.col("_text"), word) - 1
+    return (
+        articles.select(
+            F.col("id").alias("article_id"),
+            F.col(text_col).alias("_text"),
+            F.explode(F.array_distinct(F.split(F.col(text_col), " "))).alias("entity_text"),
+        )
+        .filter(n > 4)
+        .select(
+            F.col("article_id").cast("string"),
+            word,
+            etype.alias("entity_type"),
+            (((n * 7 + F.ascii(word)) % 50 + 50).cast("double") / F.lit(100.0))
+            .alias("confidence_score"),
+            start.cast("int").alias("start_position"),
+            (start + n).cast("int").alias("end_position"),
+        )
+    )
+
+
+deterministic_extractor.column_form = deterministic_columns
 
 
 # ---------------------------------------------------------------------------
@@ -424,9 +465,13 @@ def extract_entities(
     text_col: str = "title",
     min_confidence: float = 0.5,
 ) -> DataFrame:
-    """X2: text → entity rows via mapInPandas (Arrow-batched; the
-    extractor runs once per input row, vectorized per batch). The
-    ≥``min_confidence`` filter mirrors processor/ner.py:158-162.
+    """X2: text → entity rows. The ≥``min_confidence`` filter mirrors
+    processor/ner.py:158-162.
+
+    An extractor with a Column form (``extractor.column_form``) runs
+    as that form, with no Python boundary. Any other callable runs
+    through mapInPandas (Arrow-batched; the extractor runs once per
+    input row, vectorized per batch).
 
     The default extractor is the rule-based Indonesian
     :func:`gazetteer_extractor` — a real zero-dependency production
@@ -434,6 +479,10 @@ def extract_entities(
     ``model_extractor_factory()``, and the graded oracle queries pin
     :func:`deterministic_extractor` (whose SQL twin is
     :data:`ENTITIES_CTE`)."""
+    column_form = getattr(extractor, "column_form", None)
+    if column_form is not None:
+        ents = column_form(articles, text_col)
+        return ents.filter(F.col("confidence_score") >= min_confidence)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -463,9 +512,11 @@ def dedupe_entities(entities: DataFrame) -> DataFrame:
     )
 
 
-# SQL twin of deterministic_extractor over gold titles (positions are
-# not part of the comparable surface; they are offsets the oracle
-# can't cheaply reproduce and no analytics query consumes them).
+# SQL twin of deterministic_extractor (and of its Column form,
+# deterministic_columns) over gold titles. Positions are not part of
+# the comparable surface: no analytics query consumes them, and
+# tests/test_entities_native.py pins them between the two Spark-side
+# forms instead.
 ENTITIES_CTE = GOLD_CTE + """
 , entities AS (
     SELECT DISTINCT id AS article_id, word AS entity_text,

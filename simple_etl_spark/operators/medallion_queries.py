@@ -612,7 +612,7 @@ def _entities(cat: Catalog) -> DataFrame:
     GROUP BY entity_text, entity_type
     HAVING count(*) >= 2
     """,
-    survey="A9 X2 (entity rollup + HAVING over mapInPandas NER, apx.py:114-135)",
+    survey="A9 X2 (entity rollup + HAVING over extracted NER rows, apx.py:114-135)",
 )
 def m_entity_rollup(cat: Catalog) -> DataFrame:
     return (

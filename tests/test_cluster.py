@@ -31,9 +31,11 @@ def test_ship_package_is_noop_on_local(spark):
 
 def test_python_surface_query_runs_cross_jvm():
     """End-to-end on two executor JVMs: Catalog auto-ships the
-    package, a mapInPandas query (the gazetteer-era entity rollup,
-    pinned to the oracle extractor) matches DuckDB, and ship_package
-    is idempotent. ~60 s: one local-cluster session spin-up."""
+    package, a mapInPandas query (the Arrow-batched binary feature
+    extraction) matches DuckDB, and ship_package is idempotent. The
+    script asserts the query still plans a MapInPandas node, so the
+    test cannot silently stop covering the Python workers. ~60 s: one
+    local-cluster session spin-up."""
     script = textwrap.dedent(
         """
         import sys
@@ -48,11 +50,13 @@ def test_python_surface_query_runs_cross_jvm():
         import __spark_entry__ as e
         from oracle_harness import compare, duck_connection
         from simple_etl_spark.engine import ship_package
+        from simple_etl_spark.planinfo import plan_summary
         qs, osql = e.queries(), e.oracle_sql()
         sf = "/root/testdata/sf0.001"
         con = duck_connection(sf)
-        ok, msg = compare(qs["m_entity_rollup"](spark, sf), con,
-                          osql["m_entity_rollup"])
+        df = qs["llm_binary_features"](spark, sf)
+        assert plan_summary(df)["map_in_pandas"] >= 1, "no Python node"
+        ok, msg = compare(df, con, osql["llm_binary_features"])
         assert ok, f"cross-JVM oracle mismatch: {msg}"
         z1 = ship_package(spark)
         z2 = ship_package(spark)

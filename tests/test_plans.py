@@ -9,8 +9,6 @@ stay right.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 import pytest
 
 from pyspark.sql import functions as F
@@ -115,78 +113,6 @@ def test_doc_features_is_single_scan_projection(spark, sf_dir):
     plan = _plan(df)
     assert "Exchange" not in plan
     assert "codegen id" in plan  # projection runs inside codegen
-
-
-@contextmanager
-def _pinned_confs(spark, confs: dict[str, str]):
-    saved = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
-def test_bucketed_join_elides_both_exchanges(spark, sf_dir):
-    """Write orders and lineitem bucketed on orderkey; the equi-join
-    must read co-located buckets — SortMergeJoin with no Exchange on
-    either side (the write-time shuffle amortized away).
-
-    At test scale AQE would broadcast-plan these tiny tables and never
-    exercise the contract, so broadcast is pinned off for the
-    assertion — at 100 TB neither fact side is broadcastable and
-    SortMergeJoin-over-buckets is the only no-shuffle plan.
-    """
-    from simple_etl_spark.sources.bucketed import colocated_join, write_bucketed
-
-    cat = Catalog(spark, sf_dir)
-    write_bucketed(
-        cat["orders"].withColumnRenamed("o_orderkey", "k"),
-        "b_orders", "k", buckets=8, overwrite=True,
-    )
-    write_bucketed(
-        cat["lineitem"].withColumnRenamed("l_orderkey", "k"),
-        "b_lineitem", "k", buckets=8, overwrite=True,
-    )
-    with _pinned_confs(spark, {
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
-    }):
-        joined = colocated_join(spark, "b_orders", "b_lineitem", "k")
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        # and it actually computes the right thing
-        expected = (
-            cat["orders"].join(
-                cat["lineitem"],
-                cat["orders"]["o_orderkey"] == cat["lineitem"]["l_orderkey"],
-            ).count()
-        )
-        assert joined.count() == expected
-
-
-def test_write_bucketed_refuses_to_clobber(spark):
-    """A name collision must raise, not silently drop the existing
-    table (VERDICT r2 #3: overwrite guard)."""
-    from simple_etl_spark.sources.bucketed import write_bucketed
-
-    df = spark.range(10).withColumnRenamed("id", "k")
-    write_bucketed(df, "b_guard", "k", buckets=2, overwrite=True)
-    with pytest.raises(ValueError, match="already exists"):
-        write_bucketed(df, "b_guard", "k", buckets=2)
-    # the original table survived the refused write
-    assert spark.table("b_guard").count() == 10
-    spark.sql("DROP TABLE b_guard")
 
 
 def test_salted_agg_matches_plain_agg(spark, sf_dir):
@@ -441,12 +367,13 @@ def test_quantized_topk_broadcasts_queries(cat):
 
 
 def test_bm25_stays_arrayform_no_posting_shuffle(cat):
-    """r14 shape: BM25 never materializes a (token, doc) posting
-    relation — tf/dl are array expressions on the document row, stats
-    are one global aggregate, and the only join is the broadcast of
-    the 1-row stats frame. Scale property pinned here: exactly two
-    corpus scans (stats pass + scoring pass), no Exchange keyed by a
-    token or doc column, and the head is TakeOrderedAndProject."""
+    """BM25 never materializes a (token, doc) posting relation: tf/dl
+    are array expressions on the document row, and ONE global
+    aggregate yields the corpus stats together with the list of
+    matching documents, which is inlined and scored in place. Scale
+    property pinned here: exactly one corpus scan, no join at all (so
+    no crossJoin of the stats), no Exchange keyed by a token or doc
+    column, and the head is TakeOrderedAndProject."""
     import re
 
     from simple_etl_spark.functions.text import bm25_rank
@@ -457,10 +384,33 @@ def test_bm25_stays_arrayform_no_posting_shuffle(cat):
             ["spark", "merge"],
         )
     )
-    assert len(re.findall(r"- Scan parquet", plan)) == 2
+    assert len(re.findall(r"- Scan parquet", plan)) == 1
+    assert "Join" not in plan  # BroadcastNestedLoopJoin included
+    assert "CartesianProduct" not in plan
     assert "hashpartitioning(token" not in plan
     assert "hashpartitioning(doc" not in plan
     assert "TakeOrderedAndProject" in plan
+
+
+ENTITY_QUERIES = (
+    "m_entity_rollup",
+    "m_top_entity_per_type",
+    "m_entity_dedupe_keepmax",
+    "m_entity_context",
+    "m_entity_backlog",
+)
+
+
+@pytest.mark.parametrize("name", ENTITY_QUERIES)
+def test_entity_queries_plan_no_python_node(spark, sf_dir, name):
+    """The oracle-pinned extractor runs as its Column form: none of
+    the entity queries crosses into a Python worker."""
+    from simple_etl_spark.planinfo import plan_summary
+    from simple_etl_spark.queries import queries
+
+    summary = plan_summary(queries()[name](spark, sf_dir))
+    assert summary["map_in_pandas"] == 0
+    assert summary["arrow_eval_python"] == 0
 
 
 def test_no_cartesian_product_in_any_registered_query(spark, sf_dir):
